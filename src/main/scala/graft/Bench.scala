@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract, BASELINE.md): runs every SparkEntry
   * query against SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -38,19 +36,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        Tuning.AqeMinPartitionSize)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus(default = 32)
+    val spark = Session.local("graft-bench", cpus)
 
     def runNoop(name: String): Either[String, Double] = {
       val t0 = System.nanoTime()
@@ -78,7 +65,7 @@ object Bench {
     // said so in one number).
     def sentinel(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, 200000000L, 1L, cpus.toInt)
+      spark.range(0L, 200000000L, 1L, cpus)
         .selectExpr("sum(id % 12345) AS s")
         .write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9

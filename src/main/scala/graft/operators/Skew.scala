@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** Skew-mitigation utilities for the 100 TB design point (SURVEY.md §4).
   *
@@ -154,18 +155,8 @@ object Skew {
   def sizedParallelism(df: DataFrame): Int = {
     val spark = df.sparkSession
     val dp = spark.sparkContext.defaultParallelism
-    val advisory = math.max(1L,
-      spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        "64MB") match {
-        case s =>
-          val t = s.trim.toLowerCase
-          val (num, mult) =
-            if (t.endsWith("kb") || t.endsWith("k")) (t.replaceAll("[^0-9]", ""), 1L << 10)
-            else if (t.endsWith("mb") || t.endsWith("m")) (t.replaceAll("[^0-9]", ""), 1L << 20)
-            else if (t.endsWith("gb") || t.endsWith("g")) (t.replaceAll("[^0-9]", ""), 1L << 30)
-            else (t.replaceAll("[^0-9]", ""), 1L)
-          if (num.isEmpty) 64L << 20 else num.toLong * mult
-      })
+    val advisory = math.max(1L, spark.sessionState.conf
+      .getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val k = (bytes + advisory - 1) / advisory // BigInt ceil-div
     if (k >= dp) dp else math.max(1, k.toInt)

@@ -46,15 +46,7 @@ object CheckpointBlocks {
     * localCheckpoint result. */
   def checkpointCount(df: org.apache.spark.sql.DataFrame)
       : (org.apache.spark.sql.DataFrame, Long) =
-    if (df.sparkSession.conf
-        .get("spark.graft.fusedCheckpoint", "true") == "true")
-      org.apache.spark.sql.graftbridge.ColumnBridge.localCheckpointWithCount(df)
-    else {
-      // diagnostic fallback (A/B instrumentation): the pre-r15 shape —
-      // eager checkpoint then a second count job over the cached blocks
-      val out = df.localCheckpoint(true)
-      (out, out.count())
-    }
+    org.apache.spark.sql.graftbridge.ColumnBridge.localCheckpointWithCount(df)
 
   /** Drop EVERY persistent RDD in the session's SparkContext — persist()
     * caches and localCheckpoint materializations alike — plus the SQL

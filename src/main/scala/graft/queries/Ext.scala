@@ -18,7 +18,7 @@ import graft.operators.{Dedup, EventOps, Evolve, Graphs, LangModel, Multimodal, 
   * → rows-only check here, semantic equivalence asserted in ScalaTest
   * (they must find the same planted near-dups as their exact oracles).
   */
-object Ext {
+object Ext extends QuerySet {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)

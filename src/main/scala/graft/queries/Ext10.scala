@@ -20,7 +20,7 @@ import graft.operators.{Graphs, Rank, Stats, Temporal}
   *    Theil-U entropies;
   *  - pure integer counting for Goodman–Kruskal λ and l-diversity.
   */
-object Ext10 {
+object Ext10 extends QuerySet {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)

@@ -18,7 +18,7 @@ import graft.operators.{Graphs, Stats}
   *    localCheckpoint, driver actions bounded by a code constant) for
   *    the k-truss peel, replayed in the oracle as unrolled CTE rounds.
   */
-object Ext11 {
+object Ext11 extends QuerySet {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)

@@ -20,7 +20,7 @@ import graft.operators.Stats
   *  - rounds chain through 1-row broadcast frames, never a driver
   *    collect; the oracle replays each round as chained CTEs.
   */
-object Ext12 {
+object Ext12 extends QuerySet {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)

@@ -14,7 +14,7 @@ import graft.operators.Temporal
   * fixed Horner replays bit-identically on both engines. Sums over the
   * calendar-bounded day spine are spine-ordered folds (the standing
   * bounded-fold device). */
-object Ext13 {
+object Ext13 extends QuerySet {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)

@@ -13,7 +13,7 @@ import graft.operators.Stats
   * consensus fitting where every stage is a distributed pass over
   * parameter-bounded broadcast candidates (hash-partitioned RANSAC).
   */
-object Ext14 {
+object Ext14 extends QuerySet {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)

@@ -12,7 +12,7 @@ import graft.operators.{Stats, Temporal}
   * elasticity and the Weibull probability-plot fit — both are "fit a
   * line to a transcendental transform of data-sized input", the shape
   * the kernels exist for. */
-object Ext15 {
+object Ext15 extends QuerySet {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)

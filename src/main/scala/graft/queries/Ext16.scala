@@ -16,7 +16,7 @@ import graft.streaming.StreamOps
   * driver parquet as every batch query, so the oracle is an ordinary
   * DuckDB aggregate.
   */
-object Ext16 {
+object Ext16 extends QuerySet {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)

@@ -17,7 +17,7 @@ import graft.operators.{Dedup, EventOps, Graphs, Prune, Sampling, Skew, Skyline}
   * double ops), rows-only + ScalaTest bounds where internals are
   * engine-specific (sketch bytes).
   */
-object Ext2 {
+object Ext2 extends QuerySet {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)

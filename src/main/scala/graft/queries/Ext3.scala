@@ -18,7 +18,7 @@ import graft.operators.{Sketches, Stats}
   * ≥ 1 ratios, ordered folds, and shared Scala-emitted literals (the
   * [[Ext]] conventions).
   */
-object Ext3 {
+object Ext3 extends QuerySet {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)

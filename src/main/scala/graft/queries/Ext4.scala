@@ -24,7 +24,7 @@ import graft.pipelines.Corpus
   * DuckDB side ('g' flag — DuckDB replaces first-match by default
   * where Spark replaces all).
   */
-object Ext4 {
+object Ext4 extends QuerySet {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)

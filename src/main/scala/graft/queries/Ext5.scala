@@ -18,7 +18,7 @@ import graft.operators.{EventOps, Features, Graphs, Sampling, Stats}
   * final divisions, md5 hash order for determinism, window orders
   * totally tied down by (ts, id) tuples.
   */
-object Ext5 {
+object Ext5 extends QuerySet {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)

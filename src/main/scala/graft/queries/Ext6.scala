@@ -19,7 +19,7 @@ import graft.operators.{LangModel, Ranking, Stats}
   * portable series over integer args; per-doc/per-query double sums
   * fold in explicit rank order; OLS moments are fixed-point integers.
   */
-object Ext6 {
+object Ext6 extends QuerySet {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)

@@ -39,7 +39,7 @@ import graft.operators.{Rank, Stats}
   * single-partition window over a data-sized spine (Wave10PlanSpec
   * pins this).
   */
-object Ext7 {
+object Ext7 extends QuerySet {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)

@@ -27,7 +27,7 @@ import graft.operators.{Rank, Similarity, Stats}
   *  - md5-derived block decisions (the x_watermark/x_split_assign
   *    idiom) for span corruption, so masking replays exactly in SQL.
   */
-object Ext8 {
+object Ext8 extends QuerySet {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)

@@ -21,7 +21,7 @@ import graft.operators.Similarity
   *  - the 2⁻²⁰ quantized per-group S²/n term for the one-way ICC so the
   *    between-group sum of squares accumulates as an exact decimal.
   */
-object Ext9 {
+object Ext9 extends QuerySet {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)

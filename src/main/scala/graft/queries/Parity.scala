@@ -19,7 +19,7 @@ import graft.functions.{Cleanse, Exact}
   * require (co-partition on the join key; AQE converts the post-agg joins
   * to broadcast since agg output ≈ |customers|).
   */
-object Parity {
+object Parity extends QuerySet {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)

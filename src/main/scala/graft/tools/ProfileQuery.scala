@@ -1,34 +1,92 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
 
-/** Generic per-query micro-profiler (round 13): run named graded
-  * queries repeatedly under optional SQL-conf overrides and print each
-  * timing — the diagnostic harness behind the codegen-blow-up recipe
-  * in the verify skill notes (a fixed cost that survives warm-up but
-  * vanishes under `spark.sql.codegen.wholeStage=false` is a whole-stage
-  * compile blow-up, not data cost). Not part of the graded surface.
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.streaming.StreamingQueryListener
+
+import graft.{Session, SparkEntry}
+import graft.plans.CheckpointBlocks
+
+/** The project's one profiler: runs named graded queries in the
+  * session Bench builds (`SPARK_GRAFT_CPUS` cores, default 32) under
+  * optional SQL-conf overrides, each through Bench's noop sink 3×,
+  * storage reset between runs exactly like Bench. Not part of the
+  * graded surface.
   *
   * Usage: runMain graft.tools.ProfileQuery [key=value ...] name [name ...]
-  * (args containing '=' are session conf overrides, the rest are
-  * SparkEntry.queries keys; each query runs 3×, storage reset between
-  * runs exactly like Bench).
+  *
+  * Args containing '=' are session conf overrides; the rest are
+  * SparkEntry.queries keys or tokens:
+  *  - `explain`: print each query's formatted physical plan instead of
+  *    timing it;
+  *  - `SET:key=value`: set a conf mid-sequence, so an A/B of a conf
+  *    runs inside one warmed JVM (separate JVMs proved incomparable
+  *    under minute-scale swings in per-job latency);
+  *  - `GC`: full GC between queries, to tell heap or code-cache
+  *    pressure from genuine cost.
+  *
+  * Output per query: a `jobs_ms` line (median wall ms of a trivial
+  * one-task job, the Bench `sentinel_jobs_ms` twin, so each number can
+  * be tied to a latency epoch), then per run
+  *  - one `[job]` line per Spark job: id, wall ms, per-stage task
+  *    counts (skipped stages included; shows where AQE coalescing did
+  *    or did not fire) and the job description;
+  *  - one `[batch]` line per streaming micro-batch, for streaming
+  *    queries only: batch id, input rows, the trigger / planning /
+  *    getBatch / addBatch / walCommit / commitOffsets ms, and each state
+  *    operator's total rows and update/commit ms;
+  *  - the run's totals: wall seconds, jobs, completed stages and their
+  *    tasks.
   */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-profile")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        graft.Tuning.AqeMinPartitionSize)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-profile", Session.cpus(default = 32))
+    @volatile var tracing = false
+    val jobs, stages, tasks = new AtomicInteger
+    val starts = new ConcurrentHashMap[Int, (Long, String)]()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = if (tracing) {
+        jobs.incrementAndGet()
+        val desc = Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .orElse(j.stageInfos.headOption.map(_.name.take(60)))
+          .getOrElse("?")
+        val perStage = j.stageInfos.map(_.numTasks).mkString("+")
+        starts.put(j.jobId, (System.nanoTime(), s"tasks=$perStage  $desc"))
+      }
+      override def onJobEnd(j: SparkListenerJobEnd): Unit =
+        Option(starts.remove(j.jobId)).foreach { case (t0, desc) =>
+          println(f"[job] ${j.jobId}%-4d ${(System.nanoTime() - t0) / 1e6}%8.1f ms  $desc")
+        }
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        if (tracing) {
+          stages.incrementAndGet()
+          tasks.addAndGet(s.stageInfo.numTasks)
+        }
+    })
+    spark.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(
+          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(
+          e: StreamingQueryListener.QueryProgressEvent): Unit = {
+        val p = e.progress
+        def d(k: String) = p.durationMs.getOrDefault(k, -1L)
+        val state = p.stateOperators.map(s =>
+          s"rows=${s.numRowsTotal} commitMs=${s.allUpdatesTimeMs}/${s.commitTimeMs}")
+          .mkString(" | ")
+        println(f"[batch] ${p.batchId}%-3d rows=${p.numInputRows}%-7d " +
+          f"trig=${d("triggerExecution")}%-6d plan=${d("queryPlanning")}%-5d " +
+          f"get=${d("getBatch")}%-5d add=${d("addBatch")}%-6d " +
+          f"wal=${d("walCommit")}%-5d off=${d("commitOffsets")}%-5d  $state")
+      }
+      override def onQueryTerminated(
+          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    })
     val (confs, names) =
       args.partition(a => a.contains("=") && !a.startsWith("SET:"))
     confs.foreach { kv =>
@@ -36,14 +94,7 @@ object ProfileQuery {
       spark.conf.set(k, v)
       println(s"[profile] conf $k = $v")
     }
-    // SET:k=v tokens apply mid-sequence (round 15): lets an A/B of a
-    // session conf run inside ONE warmed JVM — back-to-back separate
-    // JVMs proved incomparable under the box's minute-scale latency
-    // epochs (probes swung 13→162 ms between batches)
     val (flags, qNames) = names.partition(_ == "explain")
-    // per-job scheduler-latency probe (the Bench sentinel_jobs_ms twin):
-    // printed around every query so each measurement is attributable to
-    // a latency epoch — the box swings 14↔47 ms/job within minutes
     def jobMs(): Double = {
       val k = 9
       val ts = Array.tabulate(k) { _ =>
@@ -56,17 +107,13 @@ object ProfileQuery {
     }
     jobMs() // codegen warm-up
     qNames.filter(n =>
-        n == "GC" || n.startsWith("SET:") ||
-          graft.SparkEntry.queries.contains(n))
+        n == "GC" || n.startsWith("SET:") || SparkEntry.queries.contains(n))
       .foreach { n =>
       if (n == "GC") {
-        // diagnostic token: full GC between queries — discriminates
-        // heap/code-cache pressure from genuine cost (VERDICT r14 #2)
         System.gc(); Thread.sleep(500); System.gc()
         println("[profile] forced full GC")
       } else if (n.startsWith("SET:")) {
-        // malformed tokens warn instead of MatchError-aborting a long
-        // A/B session (ADVICE r15)
+        // malformed tokens warn instead of aborting a long A/B session
         n.stripPrefix("SET:").split("=", 2) match {
           case Array(k, v) =>
             spark.conf.set(k, v)
@@ -75,38 +122,25 @@ object ProfileQuery {
             println(s"[profile] bad SET token (need SET:key=value): $n")
         }
       } else if (flags.nonEmpty) {
-        // plan mode: print the formatted physical plan instead of timing
         println(s"[profile] ==== $n plan ====")
-        println(graft.SparkEntry.queries(n)(spark, sfDir)
-          .queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
-        graft.plans.CheckpointBlocks.releaseAll(spark)
-      } else { println(f"[profile] $n%-28s jobs_ms ${jobMs()}%6.1f"); (1 to 3).foreach { i =>
-        // job/stage/task census per run (round 15): attributes a
-        // query's cost to scheduling floor (many tiny jobs) vs compute
-        val jobs = new java.util.concurrent.atomic.AtomicInteger
-        val stages = new java.util.concurrent.atomic.AtomicInteger
-        val tasks = new java.util.concurrent.atomic.AtomicInteger
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            jobs.incrementAndGet()
-          override def onStageCompleted(
-              s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            stages.incrementAndGet()
-            tasks.addAndGet(s.stageInfo.numTasks)
-          }
+        println(SparkEntry.queries(n)(spark, sfDir)
+          .queryExecution.explainString(FormattedMode))
+        CheckpointBlocks.releaseAll(spark)
+      } else {
+        println(f"[profile] $n%-28s jobs_ms ${jobMs()}%6.1f")
+        (1 to 3).foreach { i =>
+          Seq(jobs, stages, tasks).foreach(_.set(0))
+          tracing = true
+          val t0 = System.nanoTime()
+          SparkEntry.queries(n)(spark, sfDir)
+            .write.format("noop").mode("overwrite").save()
+          val dt = (System.nanoTime() - t0) / 1e9
+          Thread.sleep(150) // let the listener bus drain
+          tracing = false
+          println(f"[profile] $n%-28s run$i $dt%8.3f s  jobs=${jobs.get}%-4d stages=${stages.get}%-4d tasks=${tasks.get}%-6d")
+          CheckpointBlocks.releaseAll(spark)
         }
-        spark.sparkContext.addSparkListener(listener)
-        val t0 = System.nanoTime()
-        graft.SparkEntry.queries(n)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(150) // let the listener bus drain (diagnostic tool)
-        spark.sparkContext.removeSparkListener(listener)
-        println(f"[profile] $n%-28s run$i $dt%8.3f s  jobs=${jobs.get}%-4d stages=${stages.get}%-4d tasks=${tasks.get}%-6d")
-        graft.plans.CheckpointBlocks.releaseAll(spark)
-      } }
+      }
     }
     spark.stop()
   }

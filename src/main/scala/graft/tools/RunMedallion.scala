@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Session
 import graft.sources.Io
 
 /** CLI entry point for the full insurance medallion pipeline:
@@ -14,15 +14,7 @@ object RunMedallion {
       sys.error("usage: RunMedallion <baseDir> [scale] [seed]"))
     val scale = if (args.length > 1) args(1).toDouble else 1.0
     val seed = if (args.length > 2) args(2).toLong else 42L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-medallion")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-medallion", Session.cpus(default = 4))
     Io.runAll(spark, baseDir, scale, seed)
     for (layer <- Seq("bronze", "silver", "gold");
          t <- new java.io.File(s"$baseDir/$layer").listFiles().map(_.getName).sorted) {

@@ -2,14 +2,26 @@ package graft
 
 /** Driver-contract consistency: the gate silently downgrades any query
   * whose oracle key doesn't match (rows-only check instead of
-  * hash-compare), and a duplicate query name across Parity/Ext would
-  * silently shadow one implementation — both must be build failures
+  * hash-compare), and a duplicate query name across two query sets
+  * would silently shadow one implementation — both must be build failures
   * here, not silent grade losses. */
 class ContractSpec extends SparkSpec {
 
   test("every oracle key names an existing query (no typo'd keys)") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracles without a query: $orphans")
+  }
+
+  test("every query set's names are unique across all sets") {
+    // `toMap` keeps the last of two equal names, so a collision would
+    // silently drop one implementation (or oracle) from the registry
+    val names = SparkEntry.sets.flatMap(_.queries.keys)
+    val oracles = SparkEntry.sets.flatMap(_.oracle.keys)
+    def dupes(ns: Seq[String]) = ns.diff(ns.distinct).toSet
+    assert(SparkEntry.sets.size == 17)
+    assert(dupes(names).isEmpty, s"shadowed queries: ${dupes(names)}")
+    assert(dupes(oracles).isEmpty, s"shadowed oracles: ${dupes(oracles)}")
+    assert(names.sorted == oracles.sorted, "a query without its oracle")
   }
 
   test("Parity/Ext/Ext2 query names don't collide") {
@@ -30,6 +42,26 @@ class ContractSpec extends SparkSpec {
     val oracleOverlap = graft.queries.Parity.oracle.keySet
       .intersect(graft.queries.Ext.oracle.keySet)
     assert(oracleOverlap.isEmpty, s"shadowed oracles: $oracleOverlap")
+  }
+
+  test("every session comes from Session.local, with the bench's settings") {
+    val conf = spark.conf
+    assert(conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize") ==
+      Tuning.AqeMinPartitionSize)
+    assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(conf.get("spark.sql.shuffle.partitions") == "4")
+    import scala.jdk.CollectionConverters._
+    val builders = Seq("src/main/scala", "src/test/scala").flatMap { dir =>
+      java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator.asScala
+        .filter(_.toString.endsWith(".scala"))
+        .filter(p => new String(java.nio.file.Files.readAllBytes(p))
+          .contains("SparkSession" + ".builder"))
+        .map(_.toString).toSeq
+    }
+    assert(builders == Seq("src/main/scala/graft/Session.scala"),
+      s"sessions built outside graft.Session: $builders")
   }
 
   test("graded-surface census matches the documented counts") {

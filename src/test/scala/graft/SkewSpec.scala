@@ -142,4 +142,18 @@ class SkewSpec extends SparkSpec {
     // must drop its blocks without touching anything else
     graft.plans.CheckpointBlocks.release(out)
   }
+
+  test("sizedParallelism prices a frame by the advisory partition size") {
+    val dir = java.nio.file.Files.createTempDirectory("sized").toString
+    spark.range(0L, 20000L, 1L, 1).write.mode("overwrite").parquet(dir)
+    val df = spark.read.parquet(dir) // ~80 kb of file bytes
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    def sized(advisory: Option[String]): Int = {
+      advisory.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      try Skew.sizedParallelism(df) finally spark.conf.unset(key)
+    }
+    assert(sized(Some("1KB")) == spark.sparkContext.defaultParallelism)
+    assert(sized(Some("1GB")) == 1)
+    assert(sized(None) == 1) // default 64 MB
+  }
 }
