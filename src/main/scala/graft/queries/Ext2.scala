@@ -109,12 +109,18 @@ object Ext2 extends QuerySet {
 
     // Hierarchy walk through Spark's OWN SQL front end (WITH RECURSIVE,
     // new in Spark 4): depth of every node in the heap-numbered binary
-    // tree derived from part keys (parent p → children 2p, 2p+1). The
-    // oracle runs the IDENTICAL text in DuckDB — the one operator class
-    // where both engines execute true recursion.
+    // tree derived from part keys (parent p → children 2p, 2p+1). Both
+    // engines run the same recursive skeleton over the same edge SQL —
+    // the one operator class where both execute true recursion. DuckDB
+    // inlines the edges; Spark's UnionLoop would re-plan and re-run them
+    // (two part scans, a MAX scalar subquery, a broadcast) at every
+    // level, so here they are localCheckpoint'ed once per call into a
+    // view that each level reads. CheckpointBlocks.releaseAll frees it.
     "x_recursive_cte" -> ((s, d) => {
       t(s, d, "part").createOrReplaceTempView("gq6_part")
-      s.sql(recursiveWalkSql("gq6_part"))
+      s.sql(heapEdgesSql("gq6_part")).localCheckpoint()
+        .createOrReplaceTempView("gq6_edges")
+      s.sql(recursiveWalkSql("gq6_edges"))
     }),
 
     // The same reachability computed by the GENERIC iterative BFS
@@ -473,15 +479,11 @@ object Ext2 extends QuerySet {
             lit(0.05) * col("n_exact")).as("hll_ok"))
     }))
 
-  /** The recursive tree walk, shared verbatim between Spark (over the
-    * `gq6_part` view) and DuckDB (over `part`). */
-  private def recursiveWalkSql(partTable: String): String =
-    s"""WITH RECURSIVE walk (node, depth) AS (
-          SELECT CAST(1 AS BIGINT) AS node, 0 AS depth
-          UNION ALL
-          SELECT e.child, w.depth + 1
-          FROM walk w
-          JOIN (SELECT parent, child FROM (
+  /** The (parent, child) edges of the heap-numbered tree over
+    * `partTable`'s keys, as a parenthesized relation: children 2p and
+    * 2p+1 of every key p ≥ 1, kept while ≤ the largest key. */
+  private def heapEdgesSql(partTable: String): String =
+    s"""(SELECT parent, child FROM (
                   SELECT CAST(p_partkey AS BIGINT) AS parent,
                          CAST(p_partkey AS BIGINT) * 2 AS child
                   FROM $partTable WHERE p_partkey >= 1
@@ -490,7 +492,18 @@ object Ext2 extends QuerySet {
                          CAST(p_partkey AS BIGINT) * 2 + 1
                   FROM $partTable WHERE p_partkey >= 1) c
                 WHERE child <= (SELECT MAX(CAST(p_partkey AS BIGINT))
-                                FROM $partTable)) e
+                                FROM $partTable))"""
+
+  /** The recursive tree walk from node 1 over the `edges` relation (a
+    * table name or a parenthesized [[heapEdgesSql]]), shared by both
+    * engines. */
+  private def recursiveWalkSql(edges: String): String =
+    s"""WITH RECURSIVE walk (node, depth) AS (
+          SELECT CAST(1 AS BIGINT) AS node, 0 AS depth
+          UNION ALL
+          SELECT e.child, w.depth + 1
+          FROM walk w
+          JOIN $edges e
             ON e.parent = w.node)
         SELECT node, depth FROM walk"""
 
@@ -905,11 +918,11 @@ object Ext2 extends QuerySet {
          SELECT 'null_event_value', count(*) FROM events
            WHERE value IS NULL""",
 
-    "x_recursive_cte" -> recursiveWalkSql("part"),
+    "x_recursive_cte" -> recursiveWalkSql(heapEdgesSql("part")),
 
     // the BFS result over the heap tree IS the recursive walk's depth
     // table (cast to match the operator's output types)
     "x_shortest_path" ->
       s"""SELECT node, CAST(depth AS INT) AS dist
-          FROM (${recursiveWalkSql("part")})""")
+          FROM (${recursiveWalkSql(heapEdgesSql("part"))})""")
 }

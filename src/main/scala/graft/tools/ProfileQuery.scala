@@ -1,12 +1,14 @@
 package graft.tools
 
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.streaming.StreamingQueryListener
+
+import scala.jdk.CollectionConverters._
 
 import graft.{Session, SparkEntry}
 import graft.plans.CheckpointBlocks
@@ -40,7 +42,9 @@ import graft.plans.CheckpointBlocks
   *    getBatch / addBatch / walCommit / commitOffsets ms, and each state
   *    operator's total rows and update/commit ms;
   *  - the run's totals: wall seconds, jobs, completed stages and their
-  *    tasks.
+  *    tasks, and `driver_ms`: the wall time minus the union of the
+  *    run's job intervals (perfbench's `driver.idle_ms`), i.e. the
+  *    analysis, planning and scheduling time outside any Spark job.
   */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
@@ -48,7 +52,8 @@ object ProfileQuery {
     val spark = Session.local("graft-profile", Session.cpus(default = 32))
     @volatile var tracing = false
     val jobs, stages, tasks = new AtomicInteger
-    val starts = new ConcurrentHashMap[Int, (Long, String)]()
+    val starts = new ConcurrentHashMap[Int, (Long, Long, String)]()
+    val spans = new ConcurrentLinkedQueue[(Long, Long)]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = if (tracing) {
         jobs.incrementAndGet()
@@ -57,10 +62,11 @@ object ProfileQuery {
           .orElse(j.stageInfos.headOption.map(_.name.take(60)))
           .getOrElse("?")
         val perStage = j.stageInfos.map(_.numTasks).mkString("+")
-        starts.put(j.jobId, (System.nanoTime(), s"tasks=$perStage  $desc"))
+        starts.put(j.jobId, (System.nanoTime(), j.time, s"tasks=$perStage  $desc"))
       }
       override def onJobEnd(j: SparkListenerJobEnd): Unit =
-        Option(starts.remove(j.jobId)).foreach { case (t0, desc) =>
+        Option(starts.remove(j.jobId)).foreach { case (t0, start, desc) =>
+          spans.add((start, j.time))
           println(f"[job] ${j.jobId}%-4d ${(System.nanoTime() - t0) / 1e6}%8.1f ms  $desc")
         }
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
@@ -130,18 +136,32 @@ object ProfileQuery {
         println(f"[profile] $n%-28s jobs_ms ${jobMs()}%6.1f")
         (1 to 3).foreach { i =>
           Seq(jobs, stages, tasks).foreach(_.set(0))
+          spans.clear()
           tracing = true
+          val w0 = System.currentTimeMillis()
           val t0 = System.nanoTime()
           SparkEntry.queries(n)(spark, sfDir)
             .write.format("noop").mode("overwrite").save()
           val dt = (System.nanoTime() - t0) / 1e9
+          val w1 = System.currentTimeMillis()
           Thread.sleep(150) // let the listener bus drain
           tracing = false
-          println(f"[profile] $n%-28s run$i $dt%8.3f s  jobs=${jobs.get}%-4d stages=${stages.get}%-4d tasks=${tasks.get}%-6d")
+          val driverMs = (w1 - w0) - covered(spans.asScala.toSeq, w0, w1)
+          println(f"[profile] $n%-28s run$i $dt%8.3f s  jobs=${jobs.get}%-4d stages=${stages.get}%-4d tasks=${tasks.get}%-6d driver_ms=$driverMs")
           CheckpointBlocks.releaseAll(spark)
         }
       }
     }
     spark.stop()
+  }
+
+  /** Milliseconds of [a, b] covered by the union of `spans`. */
+  private def covered(spans: Seq[(Long, Long)], a: Long, b: Long): Long = {
+    var (sum, end) = (0L, a)
+    spans.map { case (s, e) => (s max a, e min b) }.filter(p => p._1 < p._2)
+      .sortBy(_._1).foreach { case (s, e) =>
+        if (e > end) { sum += e - (s max end); end = e }
+      }
+    sum
   }
 }

@@ -14,7 +14,9 @@ import org.apache.spark.sql.functions._
   * `spark.catalog.clearCache()`). This suite proves that path actually
   * drains BOTH trackers — the SQL CacheManager and the SparkContext's
   * persistent-RDD registry — so a long-lived session following the
-  * scaladoc holds zero residue per call. */
+  * scaladoc holds zero residue per call. x_recursive_cte's edge
+  * checkpoint (a localCheckpoint, not a CacheManager entry) must drain
+  * the same way. */
 class CacheHygieneSpec extends SparkSpec {
   import spark.implicits._
 
@@ -53,6 +55,19 @@ class CacheHygieneSpec extends SparkSpec {
     val out = graft.operators.Dedup.semDedup(
       vecs(40, 6, "d"), "id", "vec", threshold = 0.999, nLists = 4)
     assert(out.count() > 0L)
+    graft.plans.CheckpointBlocks.releaseAll(spark)
+    val (nRdds, cmEmpty) = residue(before)
+    assert(nRdds == 0 && cmEmpty,
+      s"releaseAll left residue: $nRdds persistent RDDs, cacheManager empty=$cmEmpty")
+  }
+
+  test("x_recursive_cte: materialize → releaseAll frees the edge checkpoint") {
+    graft.plans.CheckpointBlocks.releaseAll(spark)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = SparkEntry.queries("x_recursive_cte")(spark, "/root/testdata/sf0.001")
+    out.write.format("noop").mode("overwrite").save()
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty,
+      "x_recursive_cte's edge checkpoint should be a persistent RDD")
     graft.plans.CheckpointBlocks.releaseAll(spark)
     val (nRdds, cmEmpty) = residue(before)
     assert(nRdds == 0 && cmEmpty,

@@ -1,12 +1,18 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.ScalarSubquery
+import org.apache.spark.sql.catalyst.plans.logical.UnionLoop
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 import graft.functions.Text
 import graft.operators.{Dedup, Skyline}
+import graft.plans.CheckpointBlocks
 
 /** Round-6 primitives: skyline vs brute-force dominance, sorted-
   * neighborhood recall on planted dups, Unicode normalization laws,
-  * HLL rollup error + merge consistency. */
+  * HLL rollup error + merge consistency, and the recursive-CTE walk's
+  * result and loop shape. */
 class Wave6Spec extends SparkSpec {
   import spark.implicits._
 
@@ -130,5 +136,45 @@ class Wave6Spec extends SparkSpec {
       .select(hll_sketch_estimate(col("g"))).head().getLong(0)
     assert(math.abs(union - direct).toDouble / direct < 0.05,
       s"union estimate $union strays from direct sketch $direct")
+  }
+
+  private val sf = "/root/testdata/sf0.001"
+
+  test("x_recursive_cte: one row per heap node 1..max key, depth = floor(log2 node), == x_shortest_path") {
+    val maxKey = Tables.load(spark, sf, "part")
+      .agg(max(col("p_partkey").cast("long"))).head().getLong(0)
+    val walk = SparkEntry.queries("x_recursive_cte")(spark, sf)
+      .select(col("node").cast("long"), col("depth").cast("long"))
+      .as[(Long, Long)].collect().sorted.toSeq
+    assert(walk.map(_._1) == (1L to maxKey), s"nodes are not exactly 1..$maxKey")
+    walk.foreach { case (node, depth) =>
+      assert(depth == 63 - java.lang.Long.numberOfLeadingZeros(node),
+        s"node $node at depth $depth")
+    }
+    val bfs = SparkEntry.queries("x_shortest_path")(spark, sf)
+      .select(col("node").cast("long"), col("dist").cast("long"))
+      .as[(Long, Long)].collect().sorted.toSeq
+    assert(bfs == walk, "x_shortest_path's (node, dist) != x_recursive_cte's (node, depth)")
+    CheckpointBlocks.releaseAll(spark)
+  }
+
+  test("x_recursive_cte: the recursive term reads materialized edges, no file scan or scalar subquery") {
+    // Spark re-plans and re-runs the UnionLoop's recursive side at every
+    // level, so a scan or subquery there is paid once per level
+    val plan = SparkEntry.queries("x_recursive_cte")(spark, sf)
+      .queryExecution.optimizedPlan
+    val loops = plan.collectWithSubqueries { case u: UnionLoop => u }
+    assert(loops.size == 1, s"expected one UnionLoop:\n$plan")
+    val rec = loops.head.recursion
+    val scans = rec.collectWithSubqueries { case r: LogicalRelation => r }
+    val subqueries = rec.collectWithSubqueries { case p =>
+      p.expressions.flatMap(_.collect { case q: ScalarSubquery => q })
+    }.flatten
+    assert(scans.isEmpty && subqueries.isEmpty,
+      s"recursive term has ${scans.size} file scans and " +
+        s"${subqueries.size} scalar subqueries:\n$rec")
+    assert(rec.collectWithSubqueries { case r: LogicalRDD => r }.nonEmpty,
+      s"recursive term does not read the checkpointed edges:\n$rec")
+    CheckpointBlocks.releaseAll(spark)
   }
 }
