@@ -24,8 +24,9 @@ object Dedup {
 
   /** Shared LSH scaffold: distinct unordered candidate pairs from banded
     * bucket assignments `(band, bucket, <idCol>)` — self-join inside
-    * buckets, orient a<b, dedupe. Used by MinHash and embedding LSH. */
-  /** Bucket self-join over a banded signature frame. The frame feeds
+    * buckets, orient a<b, dedupe. Used by MinHash and embedding LSH.
+    *
+    * Bucket self-join over a banded signature frame. The frame feeds
     * BOTH join sides, so without a persist the (expensive) signature
     * computation upstream — minhash rows, RHP projections, simhash bit
     * votes — runs twice per query. persist() here is MEMORY_AND_DISK:
@@ -263,6 +264,14 @@ object Dedup {
       .select("doc_id", "fp").distinct()
   }
 
+  /** The affine min-hash family's modulus (2³¹−1, prime) and per-slot
+    * constants — plain integer functions of the slot index j so the SQL
+    * oracle regenerates them inline. Bounds: a,b < 2³¹, h < 2²⁸ ⇒
+    * a·h + b < 2⁵⁹, exact in int64 on every engine. */
+  val MersenneP: Long = 2147483647L
+  def affineA(j: Int): Long = ((2L * j + 1L) * 2654435761L) % MersenneP
+  def affineB(j: Int): Long = (j.toLong * 40503L * 65537L + 1L) % MersenneP
+
   /** MinHash + LSH banding: docs whose signature agrees on ALL rows of any
     * band become candidates (prob ≈ 1-(1-j^r)^b), then candidates are
     * verified with exact Jaccard.
@@ -288,14 +297,6 @@ object Dedup {
     * shingle rows). The per-row array-fold form (array_min over a
     * transform per hash) re-evaluates the shingle expression numHashes
     * times per document and ran ~40× slower at sf0.1. */
-  /** The affine min-hash family's modulus (2³¹−1, prime) and per-slot
-    * constants — plain integer functions of the slot index j so the SQL
-    * oracle regenerates them inline. Bounds: a,b < 2³¹, h < 2²⁸ ⇒
-    * a·h + b < 2⁵⁹, exact in int64 on every engine. */
-  val MersenneP: Long = 2147483647L
-  def affineA(j: Int): Long = ((2L * j + 1L) * 2654435761L) % MersenneP
-  def affineB(j: Int): Long = (j.toLong * 40503L * 65537L + 1L) % MersenneP
-
   def minhashLsh(df: DataFrame, idCol: String, textCol: String,
                  n: Int = 3, numHashes: Int = 32, bands: Int = 8,
                  threshold: Double = 0.5, seed: Long = 42): DataFrame = {

@@ -69,24 +69,6 @@ object Evolve {
     history.unionByName(closed).unionByName(untouched).unionByName(opened)
   }
 
-  /** Incremental aggregate maintenance: merge a base aggregate with the
-    * aggregate of a new delta batch — `merge(agg(A), agg(B)) == agg(A∪B)`
-    * for the sum/count family as long as the accumulators are associative
-    * (decimal sums, counts — the engine's money convention, which is WHY
-    * gold aggregates are decimal-accumulated). Null-safe on the group key
-    * (a null key group merges like any other, via <=>). Null aggregate
-    * values follow SQL SUM semantics exactly: a side with no row for the
-    * key contributes nothing, one-sided nulls absorb (null+x = x, as SUM
-    * over A∪B would skip A's all-null inputs), and a key null on BOTH
-    * sides merges to null — matching the full recompute bit-for-bit.
-    * Each merged column is cast back to its base type, so repeated
-    * merges keep a stable schema (naked decimal addition widens
-    * precision by 1 per merge, creeping toward the 38 cap).
-    *
-    * The scale story: the reference recomputes gold from scratch every
-    * run; at 100 TB a refresh must cost O(|delta|), not O(|history|) —
-    * this merge is one full-outer shuffle on the (already aggregated,
-    * small) summaries. */
   /** Apply a CDC changelog to a base table — the replication-feed
     * consumer every lakehouse runs: the feed carries full rows for
     * upserts ('U', same schema as base) plus the key for deletes ('D'),
@@ -113,6 +95,24 @@ object Evolve {
     survivors.unionByName(applied)
   }
 
+  /** Incremental aggregate maintenance: merge a base aggregate with the
+    * aggregate of a new delta batch — `merge(agg(A), agg(B)) == agg(A∪B)`
+    * for the sum/count family as long as the accumulators are associative
+    * (decimal sums, counts — the engine's money convention, which is WHY
+    * gold aggregates are decimal-accumulated). Null-safe on the group key
+    * (a null key group merges like any other, via <=>). Null aggregate
+    * values follow SQL SUM semantics exactly: a side with no row for the
+    * key contributes nothing, one-sided nulls absorb (null+x = x, as SUM
+    * over A∪B would skip A's all-null inputs), and a key null on BOTH
+    * sides merges to null — matching the full recompute bit-for-bit.
+    * Each merged column is cast back to its base type, so repeated
+    * merges keep a stable schema (naked decimal addition widens
+    * precision by 1 per merge, creeping toward the 38 cap).
+    *
+    * The scale story: the reference recomputes gold from scratch every
+    * run; at 100 TB a refresh must cost O(|delta|), not O(|history|) —
+    * this merge is one full-outer shuffle on the (already aggregated,
+    * small) summaries. */
   def mergeAggregates(base: DataFrame, delta: DataFrame, key: String): DataFrame = {
     val types = base.schema.fields.map(f => f.name -> f.dataType).toMap
     val cols = base.columns.filter(_ != key).toSeq

@@ -14,119 +14,119 @@ import graft.plans.CheckpointBlocks
   */
 object Graphs {
 
-  /** Connected components by iterative min-label propagation: every node
-    * starts labeled with itself; each round it adopts the minimum label
-    * among itself and its neighbors; at fixpoint the label is the
-    * component's minimum node id.
-    *
-    * Scale shape: each round is one equi-join (edges ⋈ labels, keyed on
-    * node) plus one hash aggregation — fully distributed, no driver-side
-    * graph. Rounds = graph diameter, the right trade for dedup graphs
-    * (near-dup clusters are shallow: bounded diameter, tiny components).
-    * For adversarially deep graphs use [[connectedComponentsLogRounds]]
-    * (O(log²) rounds). Each round's labels are localCheckpoint'ed
-    * EAGERLY: persist alone caches the data but leaves the logical plan
-    * growing by one join per round, and a few hundred rounds of nested
-    * plan blow the driver heap just stringifying the tree —
-    * checkpointing truncates lineage to the materialized result. The
-    * convergence probe is a cheap limit-1 count of changed labels.
-    *
-    * Input: an edge list (undirected; orientation and duplicates don't
-    * matter). Output: (id, component) for every node that appears in at
-    * least one edge; component = min node id of the component. */
-  def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-                          maxIter: Int = 25,
-                          localFinishEdges: Long = LocalFinishEdges): DataFrame = {
-    val sym = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .union(edges.select(col(dstCol).as("u"), col(srcCol).as("v")))
-      .distinct().persist()
-    // hybrid finish (round-9, see localStarForest): a small pair graph —
-    // the COMMON case for dedup clusters — solves in one union-find task
-    // instead of diameter-many 0.3 s rounds; the count runs over the
-    // just-persisted blocks it would have paid to materialize anyway
-    if (sym.count() <= localFinishEdges && integralIds(sym)) {
-      val star = localStarForest(sym)
-      val out = sym.select(col("u").as("id")).distinct()
-        .join(star.select(col("u").as("id"), col("v").as("component")),
-          Seq("id"), "left")
-        .select(col("id"),
-          coalesce(col("component"), col("id")).as("component"))
-        .localCheckpoint(true)
-      CheckpointBlocks.release(star); sym.unpersist()
-      return out
-    }
-    var labels = sym.select(col("u").as("id")).distinct()
-      .withColumn("comp", col("id")).persist()
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIter) {
-      val nbrMin = sym
-        .join(labels.select(col("id").as("v"), col("comp").as("vcomp")), Seq("v"))
-        .groupBy(col("u").as("id")).agg(min(col("vcomp")).as("nbr"))
-      // the convergence flag is computed INSIDE the checkpointed frame
-      // (comp strictly decreases iff a neighbor label undercuts it), so
-      // the probe is a filter over the just-materialized blocks — no
-      // second join/shuffle per round
-      val next0 = labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("nbr"), col("comp"))).as("comp"),
-          (col("comp") > coalesce(col("nbr"), col("comp"))).as("chg"))
-        .localCheckpoint(true) // materialize AND truncate lineage
-      val changed = next0.filter(col("chg")).limit(1).count()
-      val next = next0.select("id", "comp")
-      // Storage release is mechanism-specific: round 0's labels frame is
-      // persist()-cached, so unpersist() frees it; every later round is
-      // localCheckpoint'ed, and those blocks are freed ONLY via the
-      // LogicalRDD leaf (the CacheManager never tracks checkpointed
-      // frames — unpersist() there would be a silent no-op). `next` is
-      // already materialized, so nothing live reads the old blocks.
-      if (it == 0) labels.unpersist() else CheckpointBlocks.release(labels)
-      labels = next
-      converged = changed == 0
-      it += 1
-    }
-    sym.unpersist()
-    // labels that never reached fixpoint are WRONG (a component would be
-    // split) — refuse rather than return silently-bad clusters; diameter
-    // > maxIter means this graph needs the large-star/small-star variant
-    if (!converged) {
-      // maxIter=0 leaves the initial persist()-cached labels (unpersist);
-      // otherwise the last round's frame is checkpointed (leaf release)
-      if (it == 0) labels.unpersist() else CheckpointBlocks.release(labels)
-      throw new IllegalStateException(
-        s"connectedComponents: no fixpoint after $maxIter rounds " +
-          "(graph diameter exceeds maxIter); raise maxIter or use a " +
-          "logarithmic-round variant for deep graphs")
-    }
-    // materialize the result BEFORE dropping the last round's blocks: the
-    // caller's action must never depend on storage this method just
-    // released. The final checkpoint is the method's only retained
-    // storage; the caller (or a bench harness via
-    // CheckpointBlocks.releaseAll) frees it when done.
-    val out = labels.select(col("id"), col("comp").as("component"))
-      .localCheckpoint(true)
-    CheckpointBlocks.release(labels)
-    out
-  }
-
   /** Connected components in O(log²) rounds via alternating large-star /
     * small-star (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC'14) — the variant for graphs whose DIAMETER is the
-    * problem (long chains from transitive near-dup runs), where
-    * min-label propagation's diameter-many rounds would dominate.
+    * Beyond", SoCC'14): the round count grows with log² of the graph,
+    * not with its diameter, so long chains (transitive near-dup runs,
+    * spatially extended DBSCAN blobs) close in a few dozen rounds.
     *
     *  - large-star: every node links its larger neighbors to the
     *    minimum of its neighborhood (cuts long paths in half);
     *  - small-star: every node links its smaller-or-equal neighborhood
     *    to its minimum (flattens toward stars).
     *
-    * Each operation is one groupBy + one join on the node key — the same
-    * distributed shape as a propagation round — and the edge set
-    * monotonically contracts to one star per component. Convergence =
-    * edge set unchanged (count probe per round; set compare only once
-    * the monotone count stabilizes). Returns
-    * (id, component) like [[connectedComponents]]; GraphsSpec asserts
-    * the two variants agree on chains, cycles, and random graphs. */
+    * Scale shape: each operation is one groupBy + one join on the node
+    * key — fully distributed, no driver-side graph — and the edge set
+    * monotonically contracts to one star per component. Each round is
+    * localCheckpoint'ed EAGERLY: persist alone caches the data but leaves
+    * the logical plan growing by a join per round, and a few hundred
+    * rounds of nested plan blow the driver heap just stringifying the
+    * tree. Convergence = edge set unchanged (the count that materializes
+    * the checkpoint; a set compare only once the monotone count
+    * stabilizes). Once the edge set fits one task
+    * (`localFinishEdges`, integral ids) the rest is solved by the
+    * single-task union-find finish [[localStarForest]], bit-identical to
+    * the loop; specs pass `localFinishEdges = 0` to pin the loop.
+    *
+    * Input: an edge list (undirected; orientation, duplicates and
+    * self-loops don't matter). Output: (id, component) for every node
+    * that appears in at least one edge; component = min node id of the
+    * component. Refuses (IllegalStateException) rather than return
+    * unconverged labels after `maxIter` rounds. */
+  def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
+                          maxIter: Int = 50,
+                          localFinishEdges: Long = LocalFinishEdges): DataFrame = {
+    def largeStar(e: DataFrame): DataFrame = {
+      val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
+      val mins = sym.groupBy("u").agg(min(col("v")).as("mv"))
+        .select(col("u"), least(col("u"), col("mv")).as("m"))
+      sym.join(mins, Seq("u")).filter(col("v") > col("u"))
+        .select(col("v").as("u"), col("m").as("v")).distinct()
+    }
+    def smallStar(e: DataFrame): DataFrame = {
+      val dir = e.select(greatest(col("u"), col("v")).as("u"),
+        least(col("u"), col("v")).as("v")).filter(col("u") =!= col("v"))
+      val mins = dir.groupBy("u").agg(min(col("v")).as("m"))
+      dir.join(mins, Seq("u")).filter(col("v") =!= col("m"))
+        .select(col("v").as("u"), col("m").as("v"))
+        .union(mins.select(col("u"), col("m").as("v")))
+        .distinct()
+    }
+    // the input pair pipeline can be expensive (minhash banding, LSH
+    // verify, ...): evaluate it ONCE — one count-to-materialize action —
+    // into a checkpointed, deduped edge frame, and derive the node table,
+    // the local-finish gate and the first round from those blocks.
+    // Self-loops stay in `base` (they name nodes); largeStar drops them.
+    val (base, baseCount) = CheckpointBlocks.checkpointCount(
+      edges.select(col(srcCol).as("u"), col(dstCol).as("v")).distinct())
+    val nodes = base.select(col("u").as("id"))
+      .union(base.select(col("v").as("id"))).distinct()
+    // `base` feeds `nodes` until the result is materialized: round
+    // frames are released as they die, `base` only at the end
+    def drop(f: DataFrame): Unit = if (f ne base) CheckpointBlocks.release(f)
+    var cur = base
+    var curCount = baseCount
+    var converged = false
+    var it = 0
+    while (!converged && it < maxIter) {
+      if (curCount <= localFinishEdges && integralIds(cur)) {
+        // hybrid finish: the remaining graph fits one task — solve it
+        // with a single union-find job instead of more rounds
+        val fin = localStarForest(cur)
+        drop(cur)
+        cur = fin
+        converged = true
+      } else {
+        // Both steps map each input edge to AT MOST one output edge and
+        // then dedupe, so the edge count is monotone non-increasing —
+        // while it still shrinks (most rounds) the count that
+        // MATERIALIZES the checkpoint settles it (one action per round),
+        // and the shuffling exceptAll probe runs only once counts
+        // stabilize (equal-size distinct sets + empty one-sided
+        // difference ⇒ equal).
+        val (next, nextCount) =
+          CheckpointBlocks.checkpointCount(smallStar(largeStar(cur)))
+        converged = nextCount == curCount &&
+          next.exceptAll(cur).limit(1).count() == 0
+        // `next` is materialized: the dead round's checkpoint blocks can
+        // drop eagerly (Dataset.unpersist would be a no-op here — the
+        // CacheManager doesn't track checkpointed frames).
+        drop(cur)
+        cur = next
+        curCount = nextCount
+        it += 1
+      }
+    }
+    if (!converged) {
+      drop(cur); CheckpointBlocks.release(base)
+      throw new IllegalStateException(
+        s"connectedComponents: no fixpoint after $maxIter rounds")
+    }
+    // fixpoint is a star forest directed big→small: u's neighbor IS its
+    // root; roots have no outgoing edge and label themselves.
+    // Materialize BEFORE releasing cur/base: the lazy plan reads both
+    // frames' storage, and dropping blocks under a pending action works
+    // locally by timing luck only — on a busy cluster the blocks go
+    // first and the plan is unrecomputable. The result checkpoint is the
+    // method's only retained storage; the caller (or a bench harness via
+    // CheckpointBlocks.releaseAll) frees it when done.
+    val out = nodes.join(cur.select(col("u").as("id"), col("v").as("component")),
+      Seq("id"), "left")
+      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
+      .localCheckpoint(true)
+    drop(cur); CheckpointBlocks.release(base)
+    out
+  }
   /** HITS hubs & authorities (Kleinberg '99) on a directed bipartite-ish
     * edge set, UNNORMALIZED integer rounds: h₀ ≡ 1, a₁ = Aᵀh₀ (indegree),
     * h₁ = Aa₁, a₂ = Aᵀh₁ — the mutual-reinforcement scores stay exact
@@ -172,7 +172,7 @@ object Graphs {
   }
 
   /** Single-task union-find finish for a SMALL edge frame (round-9,
-    * VERDICT r08 item 2): the iterative CC loops pay ~0.3–0.8 s of fixed
+    * VERDICT r08 item 2): the iterative CC loop pays ~0.3–0.8 s of fixed
     * per-round cost (plan analysis, codegen, 2–3 jobs) regardless of
     * data size — measured invariant to shuffle-partition count — so once
     * the (shrinking) edge frame fits one task, several more distributed
@@ -185,8 +185,10 @@ object Graphs {
     *
     * Union-by-min: the attached root is always the larger, so each
     * set's root IS its minimum id — the same (node → min id) star
-    * forest the log-star fixpoint emits, making the hybrid bit-identical
-    * to the pure loop. Integral id columns only (caller guards). */
+    * forest the large-star/small-star fixpoint emits, making the hybrid
+    * bit-identical to the pure loop. Self-loops are harmless (a node
+    * joined to itself stays its own root). Integral id columns only
+    * (caller guards). */
   private def localStarForest(cur: DataFrame): DataFrame = {
     val spark = cur.sparkSession
     import spark.implicits._
@@ -251,99 +253,14 @@ object Graphs {
     * to pin the pure-loop path. */
   val LocalFinishEdges: Long = 1000000L
 
-  def connectedComponentsLogRounds(edges: DataFrame, srcCol: String,
-                                   dstCol: String, maxIter: Int = 50,
-                                   localFinishEdges: Long = LocalFinishEdges): DataFrame = {
-    def largeStar(e: DataFrame): DataFrame = {
-      val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      val mins = sym.groupBy("u").agg(min(col("v")).as("mv"))
-        .select(col("u"), least(col("u"), col("mv")).as("m"))
-      sym.join(mins, Seq("u")).filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v")).distinct()
-    }
-    def smallStar(e: DataFrame): DataFrame = {
-      val dir = e.select(greatest(col("u"), col("v")).as("u"),
-        least(col("u"), col("v")).as("v")).filter(col("u") =!= col("v"))
-      val mins = dir.groupBy("u").agg(min(col("v")).as("m"))
-      dir.join(mins, Seq("u")).filter(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .union(mins.select(col("u"), col("m").as("v")))
-        .distinct()
-    }
-    // the input pair pipeline can be expensive (minhash banding, LSH
-    // verify, ...): evaluate it ONCE into a checkpointed base frame and
-    // derive BOTH the node table and the working edge set from those
-    // blocks — deriving each from `edges` re-ran the whole upstream
-    // pipeline twice (measured ~1.7 s of the graded logstar query)
-    val base = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .distinct().localCheckpoint(true)
-    val nodes = base.select(col("u").as("id"))
-      .union(base.select(col("v").as("id"))).distinct().persist()
-    // one action: count-to-materialize (round 15, checkpointCount)
-    var (cur, curCount) =
-      CheckpointBlocks.checkpointCount(base.filter(col("u") =!= col("v")))
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIter) {
-      if (curCount <= localFinishEdges && integralIds(cur)) {
-        // hybrid finish: the remaining graph fits one task — solve it
-        // with a single union-find job instead of more log-star rounds
-        // (bit-identical output, see localStarForest)
-        val fin = localStarForest(cur)
-        CheckpointBlocks.release(cur)
-        cur = fin
-        converged = true
-      } else {
-      // localCheckpoint (not persist): truncates the per-round plan
-      // growth that would otherwise OOM the driver after many rounds.
-      // Convergence probe in two tiers. Both steps map each input edge
-      // to AT MOST one output edge and then dedupe, so the edge count is
-      // monotone non-increasing — while it still shrinks (most rounds)
-      // the count that MATERIALIZES the checkpoint settles it (fused:
-      // one action per round, checkpointCount), and the shuffling
-      // exceptAll probe runs only once counts stabilize (equal-size
-      // distinct sets + empty one-sided difference ⇒ equal).
-      val (next, nextCount) =
-        CheckpointBlocks.checkpointCount(smallStar(largeStar(cur)))
-      converged = nextCount == curCount &&
-        next.exceptAll(cur).limit(1).count() == 0
-      // `next` is materialized: the dead round's checkpoint blocks can
-      // drop eagerly (Dataset.unpersist would be a no-op here — the
-      // CacheManager doesn't track checkpointed frames).
-      CheckpointBlocks.release(cur)
-      cur = next
-      curCount = nextCount
-      it += 1
-      }
-    }
-    if (!converged) {
-      CheckpointBlocks.release(cur); CheckpointBlocks.release(base); nodes.unpersist()
-      throw new IllegalStateException(
-        s"connectedComponentsLogRounds: no fixpoint after $maxIter rounds")
-    }
-    // fixpoint is a star forest directed big→small: u's neighbor IS its
-    // root; roots have no outgoing edge and label themselves.
-    // Materialize BEFORE releasing cur/nodes: the lazy plan reads both
-    // frames' storage, and dropping blocks under a pending action works
-    // locally by timing luck only — on a busy cluster the blocks go
-    // first and the plan is unrecomputable.
-    val out = nodes.join(cur.select(col("u").as("id"), col("v").as("component")),
-      Seq("id"), "left")
-      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
-      .localCheckpoint(true)
-    CheckpointBlocks.release(cur); CheckpointBlocks.release(base); nodes.unpersist()
-    out
-  }
-
   /** Cluster assignment for dedup: every doc that appears in ≥ 1 pair,
     * with its cluster representative (min doc id in the component) and
     * the cluster size — the "which copies do I drop" table (keep rows
-    * where doc_id = cluster_rep, drop the rest). `logRounds` selects the
-    * large-star/small-star variant (deep graphs). */
-  def dedupClusters(pairs: DataFrame, aCol: String, bCol: String,
-                    logRounds: Boolean = false): DataFrame = {
-    val cc = if (logRounds) connectedComponentsLogRounds(pairs, aCol, bCol)
-      else connectedComponents(pairs, aCol, bCol)
+    * where doc_id = cluster_rep, drop the rest). The components come
+    * from [[connectedComponents]], so cluster depth costs O(log²)
+    * rounds, not one round per hop. */
+  def dedupClusters(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
+    val cc = connectedComponents(pairs, aCol, bCol)
     val sizes = cc.groupBy("component").agg(count(lit(1)).as("cluster_size"))
     cc.join(sizes, Seq("component"))
       .select(col("id").as("doc_id"), col("component").as("cluster_rep"),
@@ -586,6 +503,10 @@ object Graphs {
         col("adamic_adar"))
   }
 
+  /** 2⁴⁰ — the fixed-point scale shared by the rank folds and their
+    * DuckDB oracles. Exactly representable as a double. */
+  val RankScale: Double = 1099511627776.0
+
   /** Bounded-iteration PageRank over an undirected graph (each input
     * edge counts both ways, so there are no dangling nodes and no lost
     * rank mass to special-case). rank₀ = 1/N; each round
@@ -611,11 +532,9 @@ object Graphs {
     * DuckDB oracle replays it verbatim as
     * `sum(CAST(floor(c * 2^40) AS BIGINT)) / 2^40`. The ~2⁻⁴⁰ per-edge
     * quantization is identical on both sides, so the contract stays
-    * bit-exact. */
-  /** 2⁴⁰ — the fixed-point scale shared by the rank folds and their
-    * DuckDB oracles. Exactly representable as a double. */
-  val RankScale: Double = 1099511627776.0
-  /** @param saltedSetup engage [[Skew.saltedDedup]] for the adjacency
+    * bit-exact.
+    *
+    * @param saltedSetup engage [[Skew.saltedDedup]] for the adjacency
     *   dedup — the hub-skew mitigation (round 15, VERDICT r14 item 3):
     *   on a power-law graph the single-key dedup below concentrates a
     *   hub's whole edge list in one task and AQE cannot split a dedup
@@ -773,20 +692,6 @@ object Graphs {
     ranks
   }
 
-  /** k-core membership: the maximal subgraph where every node keeps
-    * degree ≥ k, found by iterative peeling — drop all nodes of degree
-    * < k, recompute degrees on the survivor-induced subgraph, repeat to
-    * fixpoint. The standard graph-density filter (spam/bot subnetwork
-    * extraction, dense community seeding).
-    *
-    * Scale shape per round: one degree aggregation + two semi-joins to
-    * induce the survivor subgraph — all keyed on the node; rounds ≤ the
-    * peeling depth (typically small). Same storage discipline as the
-    * other iterative operators: per-round localCheckpoint + leaf block
-    * release. Returns the k-core's (id, degree) — degree measured IN
-    * the core. Iterative deletion has no single-query SQL form, so the
-    * graded query is rows-only; GraphsSpec proves equivalence with a
-    * brute-force sequential peel. */
   /** Single-task sequential peel finish for [[kCore]] — the k-core is
     * the UNIQUE maximal subgraph with min degree ≥ k (independent of
     * peel order), so once the surviving edge frame fits one task the
@@ -855,6 +760,20 @@ object Graphs {
     * semi-joins + a count) is paid to the fixpoint. */
   val KCoreLocalFinishEdges: Long = 4 * LocalFinishEdges
 
+  /** k-core membership: the maximal subgraph where every node keeps
+    * degree ≥ k, found by iterative peeling — drop all nodes of degree
+    * < k, recompute degrees on the survivor-induced subgraph, repeat to
+    * fixpoint. The standard graph-density filter (spam/bot subnetwork
+    * extraction, dense community seeding).
+    *
+    * Scale shape per round: one degree aggregation + two semi-joins to
+    * induce the survivor subgraph — all keyed on the node; rounds ≤ the
+    * peeling depth (typically small). Same storage discipline as the
+    * other iterative operators: per-round localCheckpoint + leaf block
+    * release. Returns the k-core's (id, degree) — degree measured IN
+    * the core. Iterative deletion has no single-query SQL form, so the
+    * graded query is rows-only; GraphsSpec proves equivalence with a
+    * brute-force sequential peel. */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String,
             k: Int, maxIter: Int = 100,
             localFinishEdges: Long = KCoreLocalFinishEdges): DataFrame = {
@@ -901,24 +820,6 @@ object Graphs {
     out
   }
 
-  /** Single/multi-source BFS: minimum hop count from `sources` to every
-    * reachable node within `maxHops`. Classic frontier expansion — the
-    * visited set grows monotonically and each round's join keys on the
-    * FRONTIER (the just-discovered nodes), which shrinks as the search
-    * saturates, so late rounds are nearly free even on huge graphs.
-    *
-    * Scale shape per round: one equi-join (frontier ⋈ edges, keyed on
-    * the edge src) + one left-anti join against the retained level
-    * frames (last two when undirected — the symmetric-adjacency
-    * distance argument; all of them when directed) + a distinct — all
-    * partitioned on the node key; no collect, no driver-side graph
-    * state. Rounds = min(eccentricity, maxHops).
-    * Storage follows the engine's iterative-operator discipline:
-    * every round's frames are localCheckpoint'ed (plan truncation) and
-    * dead rounds' blocks are dropped via the LogicalRDD leaf.
-    *
-    * Unreachable nodes are simply absent (no +inf sentinel rows).
-    * Returns (id, dist). */
   /** Single-task BFS finish for [[shortestPaths]]: hop distances are
     * the unique min-hop function of (edge set, source set, maxHops), so
     * once the directed adjacency fits one task the local frontier
@@ -965,6 +866,24 @@ object Graphs {
       .localCheckpoint(true)
   }
 
+  /** Single/multi-source BFS: minimum hop count from `sources` to every
+    * reachable node within `maxHops`. Classic frontier expansion — the
+    * visited set grows monotonically and each round's join keys on the
+    * FRONTIER (the just-discovered nodes), which shrinks as the search
+    * saturates, so late rounds are nearly free even on huge graphs.
+    *
+    * Scale shape per round: one equi-join (frontier ⋈ edges, keyed on
+    * the edge src) + one left-anti join against the retained level
+    * frames (last two when undirected — the symmetric-adjacency
+    * distance argument; all of them when directed) + a distinct — all
+    * partitioned on the node key; no collect, no driver-side graph
+    * state. Rounds = min(eccentricity, maxHops).
+    * Storage follows the engine's iterative-operator discipline:
+    * every round's frames are localCheckpoint'ed (plan truncation) and
+    * dead rounds' blocks are dropped via the LogicalRDD leaf.
+    *
+    * Unreachable nodes are simply absent (no +inf sentinel rows).
+    * Returns (id, dist). */
   def shortestPaths(edges: DataFrame, srcCol: String, dstCol: String,
                     sources: DataFrame, idCol: String,
                     maxHops: Int, directed: Boolean = false,
@@ -1476,29 +1395,6 @@ object Graphs {
     out
   }
 
-  /** Synchronous label propagation (Raghavan–Albert–Kumara LPA) for
-    * community detection, made DETERMINISTIC: every node starts as its
-    * own label; each round every node simultaneously adopts the label
-    * most frequent among its neighbors, ties broken by the SMALLEST
-    * label. Runs a FIXED `rounds` count (synchronous LPA can oscillate
-    * on bipartite structures, so a fixpoint claim would be wrong by
-    * construction; a small fixed round count is the standard practice
-    * and makes the operator a pure function of the edge set — the
-    * unrollable-oracle property the k-core peel established). Returns
-    * (id, lbl) after the final round; nodes sharing lbl are one
-    * community.
-    *
-    * Distinct from [[connectedComponents]]: CC merges everything
-    * reachable; LPA keeps densely-linked neighborhoods apart inside one
-    * component — the community view, not the reachability view.
-    *
-    * Scale shape per round: one edge⋈label join keyed on the neighbor
-    * endpoint, one (node, label) count aggregate, one per-node argmax
-    * via min(struct(-count, label)) — all hash operations, no windows,
-    * no data-sized partition. The symmetric edge list is cached once
-    * and reused; the fixed-count rounds ride a lazy chain (no per-round
-    * action) with only the final labels persisted for multi-consumer
-    * callers (round 16). */
   /** Single-task synchronous-LPA finish for [[labelPropagation]]: the
     * operator is a PURE FUNCTION of the symmetric edge set (fixed round
     * count, deterministic max-count/min-label adoption), so once that
@@ -1547,6 +1443,29 @@ object Graphs {
       .toDF("id", "lbl").localCheckpoint(true)
   }
 
+  /** Synchronous label propagation (Raghavan–Albert–Kumara LPA) for
+    * community detection, made DETERMINISTIC: every node starts as its
+    * own label; each round every node simultaneously adopts the label
+    * most frequent among its neighbors, ties broken by the SMALLEST
+    * label. Runs a FIXED `rounds` count (synchronous LPA can oscillate
+    * on bipartite structures, so a fixpoint claim would be wrong by
+    * construction; a small fixed round count is the standard practice
+    * and makes the operator a pure function of the edge set — the
+    * unrollable-oracle property the k-core peel established). Returns
+    * (id, lbl) after the final round; nodes sharing lbl are one
+    * community.
+    *
+    * Distinct from [[connectedComponents]]: CC merges everything
+    * reachable; LPA keeps densely-linked neighborhoods apart inside one
+    * component — the community view, not the reachability view.
+    *
+    * Scale shape per round: one edge⋈label join keyed on the neighbor
+    * endpoint, one (node, label) count aggregate, one per-node argmax
+    * via min(struct(-count, label)) — all hash operations, no windows,
+    * no data-sized partition. The symmetric edge list is cached once
+    * and reused; the fixed-count rounds ride a lazy chain (no per-round
+    * action) with only the final labels persisted for multi-consumer
+    * callers (round 16). */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        rounds: Int,
                        localFinishEdges: Long = LocalFinishEdges): DataFrame = {
@@ -1701,6 +1620,15 @@ object Graphs {
     out
   }
 
+  /** Element-wise max of packed register arrays ([[graft.plans
+    * .RegisterMaxAgg]]) as a Column — [[hyperANF]]'s merge; public so
+    * the spec can pin its partial-aggregation plan shape. */
+  def registerMax(c: Column): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    ColumnBridge.column(graft.plans.RegisterMaxAgg(
+      ColumnBridge.expression(c)).toAggregateExpression())
+  }
+
   /** HyperANF neighborhood function + effective diameter (Boldi, Rosa
     * & Vigna 2011, "HyperANF: approximating the neighbourhood function
     * of very large graphs on a budget"; HyperBall 2013): every node
@@ -1760,15 +1688,6 @@ object Graphs {
     * same eff_diameter on every row (min t with
     * 100·nf_q(t) ≥ alphaPct·nf_q(rounds), compared in exact integer
     * arithmetic). */
-  /** Element-wise max of packed register arrays ([[graft.plans
-    * .RegisterMaxAgg]]) as a Column — [[hyperANF]]'s merge; public so
-    * the spec can pin its partial-aggregation plan shape. */
-  def registerMax(c: Column): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(graft.plans.RegisterMaxAgg(
-      ColumnBridge.expression(c)).toAggregateExpression())
-  }
-
   def hyperANF(edges: DataFrame, srcCol: String, dstCol: String,
                rounds: Int, alphaPct: Int = 90,
                retainRounds: Boolean = true): DataFrame = {

@@ -29,17 +29,6 @@ object Retrieval {
     df.select(col(idCol).as("doc"),
       explode(Text.tokens(col(textCol))).as("term"))
 
-  /** Okapi BM25 ranking of documents against a bag-of-terms query.
-    * Returns the `k` highest-scoring documents (ties broken by doc id)
-    * with their scores and ranks.
-    *
-    * idf = ln(1 + (N − df + 0.5)/(df + 0.5))  (the always-positive
-    * Robertson–Sparck-Jones form, via [[Pmath.lnColumn]] — libm ln
-    * differs across engines in the last ulp, the portable series does
-    * not), tf component =
-    * tf·(k1+1)/(tf + k1·(1 − b + b·dl/avgdl)). Terms absent from a doc
-    * contribute 0 (coalesce), so conjunctive-ish queries still rank
-    * partial matches. */
   /** Dirichlet-smoothed query-likelihood ranking (Zhai & Lafferty
     * 2004) — the language-modeling alternative to [[bm25TopK]]:
     * score(d, q) = Σ_w ln((c(w,d) + μ·p(w|C)) / (|d| + μ)). EVERY doc
@@ -80,6 +69,17 @@ object Retrieval {
         BoundedWindow.orderBy(col("score").desc, col("doc_id").asc)))
   }
 
+  /** Okapi BM25 ranking of documents against a bag-of-terms query.
+    * Returns the `k` highest-scoring documents (ties broken by doc id)
+    * with their scores and ranks.
+    *
+    * idf = ln(1 + (N − df + 0.5)/(df + 0.5))  (the always-positive
+    * Robertson–Sparck-Jones form, via [[Pmath.lnColumn]] — libm ln
+    * differs across engines in the last ulp, the portable series does
+    * not), tf component =
+    * tf·(k1+1)/(tf + k1·(1 − b + b·dl/avgdl)). Terms absent from a doc
+    * contribute 0 (coalesce), so conjunctive-ish queries still rank
+    * partial matches. */
   def bm25TopK(df: DataFrame, idCol: String, textCol: String,
                queryTerms: Seq[String], k: Int = 10,
                k1: Double = 1.2, b: Double = 0.75): DataFrame = {

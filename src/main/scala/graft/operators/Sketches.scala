@@ -108,21 +108,6 @@ object Sketches {
     * both engines as the same literal (the Benford convention). */
   def lnGamma(gamma: Double): Double = math.log(gamma)
 
-  /** DDSketch-style relative-error histogram (Masson et al., VLDB'19):
-    * values bucket by floor(ln x / ln γ), so every bucket spans a
-    * constant RELATIVE width — the quantile sketch monitoring systems
-    * ship because a q99 read off the bucket boundaries is within γ−1
-    * relative error at any scale, and bucket counts merge by addition.
-    *
-    * This form returns the full (bucket, n) table — the sketch content
-    * itself, exact-oracle-able because ln is the portable series and
-    * ln γ is a shared literal. Quantile reads are a cumulative scan over
-    * ≤ a few hundred buckets (SketchesSpec derives q50/q95/q99 and
-    * bounds them against the exact percentiles). Values below 1 (outside
-    * the portable ln domain) are clamped into bucket 0 — fine for the
-    * price/amount domains this targets. One narrow projection + one
-    * bucket-keyed hash aggregate; merging shards is `GROUP BY bucket`
-    * again. */
   /** Count-Min sketch (Cormode & Muthukrishnan 2005) frequency
     * estimates: a depth×width integer matrix (bucket j-th row =
     * md5(j|term) mod width), point estimate = min over rows — the
@@ -159,6 +144,21 @@ object Sketches {
         (col("est_n") - col("true_n")).as("overcount"))
   }
 
+  /** DDSketch-style relative-error histogram (Masson et al., VLDB'19):
+    * values bucket by floor(ln x / ln γ), so every bucket spans a
+    * constant RELATIVE width — the quantile sketch monitoring systems
+    * ship because a q99 read off the bucket boundaries is within γ−1
+    * relative error at any scale, and bucket counts merge by addition.
+    *
+    * This form returns the full (bucket, n) table — the sketch content
+    * itself, exact-oracle-able because ln is the portable series and
+    * ln γ is a shared literal. Quantile reads are a cumulative scan over
+    * ≤ a few hundred buckets (SketchesSpec derives q50/q95/q99 and
+    * bounds them against the exact percentiles). Values below 1 (outside
+    * the portable ln domain) are clamped into bucket 0 — fine for the
+    * price/amount domains this targets. One narrow projection + one
+    * bucket-keyed hash aggregate; merging shards is `GROUP BY bucket`
+    * again. */
   def ddsketchBuckets(df: DataFrame, valueCol: Column,
                       gamma: Double = 1.02): DataFrame = {
     require(gamma > 1.0, s"ddsketchBuckets: gamma must be > 1, got $gamma")

@@ -80,10 +80,11 @@ object Spatial {
     * Returns (id, role ∈ core|border|noise, cluster nullable).
     *
     * Scale shape: everything is ε-neighbor joins and id-keyed hash
-    * aggregates off the density-bounded grid join; CC is the bounded-
-    * round localCheckpoint'd propagation (components above the density
-    * threshold can percolate, so the label step must be the iterative
-    * one, not a collect). */
+    * aggregates off the density-bounded grid join; CC is
+    * [[Graphs.connectedComponents]]' localCheckpoint'd large-star/
+    * small-star loop (components above the density threshold can
+    * percolate, so the label step must be the iterative one, not a
+    * collect). */
   def dbscan(df: DataFrame, idCol: String, xCol: String, yCol: String,
              eps: Long, minPts: Int): DataFrame = {
     require(minPts >= 1, s"dbscan: minPts must be >= 1, got $minPts")
@@ -102,12 +103,11 @@ object Spatial {
       .join(coreIds.select(col("id").as("id_b")), Seq("id_b"))
     // cores connected to no other core never enter CC — they label
     // themselves via the coalesce; CC output is (id, component=min id).
-    // The LOG-ROUND variant is mandatory here, not an option: a cluster
-    // is by construction a dense blob at the density threshold, and its
-    // ε-graph diameter grows with its spatial extent — at sf0.1 the
-    // largest cluster already exceeds min-label propagation's 25-round
-    // budget, while large-star/small-star closes it in O(log²) rounds.
-    val comps = Graphs.connectedComponentsLogRounds(coreEdges, "id_a", "id_b")
+    // A cluster is by construction a dense blob at the density
+    // threshold, so its ε-graph diameter grows with its spatial extent;
+    // connectedComponents' round count grows with log² of the graph,
+    // not its diameter, so wide clusters close in a few rounds.
+    val comps = Graphs.connectedComponents(coreEdges, "id_a", "id_b")
     val coreClusters = coreIds
       .join(comps, Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("cluster"))

@@ -142,25 +142,6 @@ object Temporal {
       .agg(sum(when(col("hit"), 1L).otherwise(0L)).as("n_neighbors"))
   }
 
-  /** SAX symbolic words (Lin/Keogh's Symbolic Aggregate approXimation,
-    * rank-quantized variant) — each key's day becomes a short string:
-    * hourly integer-cents sums → Piecewise Aggregate Approximation
-    * (segment sums over `slotsPerSeg`-hour blocks, kept integral) →
-    * per-key rank quartiles via a TOTALLY-ordered ntile (segment sum,
-    * then day, then segment — the x_rfm_segments tiebreak discipline;
-    * textbook SAX cuts Gaussian breakpoints on z-scores, which would
-    * put unordered double sums on the graded path) → letters, joined in
-    * segment order. Only FULL days (all 24 slots present) emit a word —
-    * a partial day would quantize against a different support.
-    *
-    * The "time series as text" bridge: SAX words feed the engine's
-    * whole string stack — exact dedup, n-gram similarity, inverted
-    * indexes — turning motif discovery and whole-series clustering at
-    * 100 TB into the string problems those operators already solve.
-    *
-    * Scale shape: two hash aggregates down the calendar spine, one
-    * key-partitioned window over segments-per-key rows (calendar-sized,
-    * never data-sized), one day-keyed rebuild aggregate. */
   /** Exact dynamic time warping distance (Sakoe & Chiba 1978, full
     * window) between two integer-valued daily series, with
     * |a_i − b_j| cell costs:
@@ -462,6 +443,25 @@ object Temporal {
           element_at(col("op"), col("j") + 1)).as("forecast"))
   }
 
+  /** SAX symbolic words (Lin/Keogh's Symbolic Aggregate approXimation,
+    * rank-quantized variant) — each key's day becomes a short string:
+    * hourly integer-cents sums → Piecewise Aggregate Approximation
+    * (segment sums over `slotsPerSeg`-hour blocks, kept integral) →
+    * per-key rank quartiles via a TOTALLY-ordered ntile (segment sum,
+    * then day, then segment — the x_rfm_segments tiebreak discipline;
+    * textbook SAX cuts Gaussian breakpoints on z-scores, which would
+    * put unordered double sums on the graded path) → letters, joined in
+    * segment order. Only FULL days (all 24 slots present) emit a word —
+    * a partial day would quantize against a different support.
+    *
+    * The "time series as text" bridge: SAX words feed the engine's
+    * whole string stack — exact dedup, n-gram similarity, inverted
+    * indexes — turning motif discovery and whole-series clustering at
+    * 100 TB into the string problems those operators already solve.
+    *
+    * Scale shape: two hash aggregates down the calendar spine, one
+    * key-partitioned window over segments-per-key rows (calendar-sized,
+    * never data-sized), one day-keyed rebuild aggregate. */
   def saxWords(df: DataFrame, keyCol: String, tsCol: Column,
                valueExpr: Column, slotsPerSeg: Int = 4,
                alphabet: Int = 4): DataFrame = {

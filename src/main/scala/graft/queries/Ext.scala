@@ -64,13 +64,12 @@ object Ext extends QuerySet {
         Dedup.ngramJaccard(t(s, d, "documents"), "doc_id", "text",
           n = 3, threshold = 0.5, maxBucket = 1000), "doc_a", "doc_b")),
 
-    // the O(log²)-round large-star/small-star variant, graded end-to-end
-    // against the SAME recursive-closure oracle as the propagation form
+    // kept as a graded name from when clustering had two algorithms;
+    // it now runs the same operator as x_dedup_clusters
     "x_dedup_clusters_logstar" -> ((s, d) =>
       Graphs.dedupClusters(
         Dedup.ngramJaccard(t(s, d, "documents"), "doc_id", "text",
-          n = 3, threshold = 0.5, maxBucket = 1000), "doc_a", "doc_b",
-        logRounds = true)),
+          n = 3, threshold = 0.5, maxBucket = 1000), "doc_a", "doc_b")),
 
     // quality-chosen cluster representatives: keep the BEST member of
     // each near-dup cluster (quality desc, id asc), not an arbitrary one
@@ -1492,17 +1491,6 @@ object Ext extends QuerySet {
         FROM ranked WHERE rank <= 5"""
   }
 
-  /** IVF ANN replay — the full ITERATIVE pipeline in SQL: md5-ordered
-    * centroid seed sample, two unrolled Lloyd iterations (argmin
-    * assignment with (distance, list) tie-break; per-dimension means in
-    * the 2⁻²⁰ fixed point of x_embed_centroids — associative, so Spark's
-    * shuffled aggregation and DuckDB's scan produce identical doubles),
-    * then inverted-list probe + exact cosine re-rank. k-means is
-    * hash-compared end to end. */
-  /** The portable-k-means WITH-clause prefix shared by [[dAnnIvfOracle]]
-    * and the SemDeDup oracle: md5-ordered centroid seed sample, two
-    * unrolled fixed-point Lloyd iterations, final assignment `listed`
-    * (neighbor_id, cv, list) plus the scored s3 pass it derives from. */
   /** CTE chain replaying [[graft.operators.LangModel.bpeMerges]]: the
     * per-round pair argmax in SQL and the greedy-leftmost merge rewrite
     * as a list_reduce whose accumulator is the chr(31)-joined symbol
@@ -1585,6 +1573,10 @@ object Ext extends QuerySet {
                     FROM s3) WHERE rn = 1)"""
   }
 
+  /** The portable-k-means WITH-clause prefix shared by [[dAnnIvfOracle]]
+    * and the SemDeDup oracle: md5-ordered centroid seed sample, two
+    * unrolled fixed-point Lloyd iterations, final assignment `listed`
+    * (neighbor_id, cv, list) plus the scored s3 pass it derives from. */
   private[queries] def dKmeansCommon: String =
     s"""e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
               FROM embeddings),
@@ -1668,6 +1660,13 @@ object Ext extends QuerySet {
         WHERE rank <= $k"""
   }
 
+  /** IVF ANN replay — the full ITERATIVE pipeline in SQL: md5-ordered
+    * centroid seed sample, two unrolled Lloyd iterations (argmin
+    * assignment with (distance, list) tie-break; per-dimension means in
+    * the 2⁻²⁰ fixed point of x_embed_centroids — associative, so Spark's
+    * shuffled aggregation and DuckDB's scan produce identical doubles),
+    * then inverted-list probe + exact cosine re-rank. k-means is
+    * hash-compared end to end. */
   private def dAnnIvfOracle: String = {
     val (nProbe, k) = (4, 5)
     s"""WITH $dKmeansCommon,
@@ -1742,19 +1741,6 @@ object Ext extends QuerySet {
               FROM g)
         SELECT DISTINCT doc_id, fp FROM m WHERE pos <= n - 3)"""
 
-  /** The landmark-Brandes replay shared by x_betweenness (long path)
-    * and x_betweenness_dec (the decimalSigma path — BIT-IDENTICAL
-    * integer pipeline, so one HUGEINT oracle grades both): forward
-    * levels l1..l`hops` (sigma = sum over level-(d−1) predecessors,
-    * NOT EXISTS against the cumulative visited set), backward
-    * d(hops−1)..d0 with the integer contribution
-    * (sigma·(2³⁰+dq)) // sigma_w in HUGEINT; one double division at
-    * the end. Every chained CTE is MATERIALIZED (DuckDB inlines plain
-    * CTEs per reference — the doubly-referenced level chain would
-    * re-derive its prefix 2^levels times; at sf0.1 that spilled past
-    * the disk before failing). `flt` filters the lineitem edge source;
-    * exhaustion-safe: levels past the true eccentricity are empty CTEs
-    * on both engines. */
   /** The HyperANF replay, parameterized (round 14): register evolution
     * unrolled over a fixed `T`-round horizon (register-max per level,
     * MATERIALIZED — the betweenness CTE-chain discipline), then ONE
@@ -1822,6 +1808,19 @@ object Ext extends QuerySet {
         FROM nf, tot, eff"""
   }
 
+  /** The landmark-Brandes replay shared by x_betweenness (long path)
+    * and x_betweenness_dec (the decimalSigma path — BIT-IDENTICAL
+    * integer pipeline, so one HUGEINT oracle grades both): forward
+    * levels l1..l`hops` (sigma = sum over level-(d−1) predecessors,
+    * NOT EXISTS against the cumulative visited set), backward
+    * d(hops−1)..d0 with the integer contribution
+    * (sigma·(2³⁰+dq)) // sigma_w in HUGEINT; one double division at
+    * the end. Every chained CTE is MATERIALIZED (DuckDB inlines plain
+    * CTEs per reference — the doubly-referenced level chain would
+    * re-derive its prefix 2^levels times; at sf0.1 that spilled past
+    * the disk before failing). `flt` filters the lineitem edge source;
+    * exhaustion-safe: levels past the true eccentricity are empty CTEs
+    * on both engines. */
   private[queries] def dBetweennessOracle(flt: String, k: Int,
                                           hops: Int): String = {
     val q = "CAST(1073741824 AS HUGEINT)"
@@ -2034,8 +2033,8 @@ object Ext extends QuerySet {
     // transitive closure by recursive CTE over the ngram-jaccard pair set
     // (identical to the x_dedup_ngram_jaccard oracle), then per-node
     // component = min reachable id, size = |reachable| + self.
-    // BOTH engine variants (propagation and large-star/small-star) are
-    // graded against this same closure.
+    // x_dedup_clusters and x_dedup_clusters_logstar run the same engine
+    // operator and are both graded against this closure.
     "x_dedup_clusters" -> clustersClosureOracle,
     "x_dedup_clusters_logstar" -> clustersClosureOracle,
 

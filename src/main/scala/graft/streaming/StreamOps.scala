@@ -207,8 +207,9 @@ object StreamOps {
     * watermark — the state-bounding contract every production
     * stream-stream join needs (an unbounded-time join would buffer both
     * streams forever). Batch twin: the identical join condition on static
-    * frames (StreamingSpec asserts equality on a bounded replay). */
-  /** `joinType` "inner" emits matches as they arrive; "leftOuter" ALSO
+    * frames (StreamingSpec asserts equality on a bounded replay).
+    *
+    * `joinType` "inner" emits matches as they arrive; "leftOuter" ALSO
     * emits unmatched clicks with null purchase columns — but only once
     * the watermark proves no in-window purchase can still arrive (the
     * interval bound on both event times is what lets Spark expire join
@@ -301,8 +302,6 @@ object StreamOps {
     q.stop()
   }
 
-  /** Replay a bounded parquet directory through a streaming query into a
-    * memory sink; returns the sink table name. Used by tests and demos. */
   /** Native gap-session counts via Spark's `session_window` — the
     * DECLARATIVE counterpart of [[sessionCounts]]' custom
     * flatMapGroupsWithState state machine: same gap-merge semantics,
@@ -322,6 +321,8 @@ object StreamOps {
           .as("session_end"),
         col("n_events"))
 
+  /** Replay a bounded parquet directory through a streaming query into a
+    * memory sink; returns the sink table name. Used by tests and demos. */
   def replayToMemory(spark: SparkSession, df: DataFrame, name: String): Unit = {
     val q = df.writeStream.outputMode("complete")
       .format("memory").queryName(name).start()

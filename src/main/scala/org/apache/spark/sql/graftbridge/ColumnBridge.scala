@@ -27,8 +27,6 @@ object ColumnBridge {
     case _ => c
   }
 
-  /** DataFrame from a raw LogicalPlan (classic Dataset.ofRows is
-    * private[sql]) — needed to inject custom logical nodes. */
   /** Idempotently install an extra planner strategy on the session. */
   def addStrategy(spark: SparkSession,
                   s: org.apache.spark.sql.execution.SparkStrategy): Unit = {
@@ -37,6 +35,8 @@ object ColumnBridge {
       cs.experimental.extraStrategies = cs.experimental.extraStrategies :+ s
   }
 
+  /** DataFrame from a raw LogicalPlan (classic Dataset.ofRows is
+    * private[sql]) — needed to inject custom logical nodes. */
   def ofRows(spark: SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(

@@ -64,6 +64,22 @@ class ContractSpec extends SparkSpec {
       s"sessions built outside graft.Session: $builders")
   }
 
+  test("every scaladoc sits on a definition, not on another doc comment") {
+    // a doc comment followed (blank lines aside) by another doc comment
+    // is orphaned: scaladoc attaches only the second one, so the first
+    // describes nothing and usually ends up read as the wrong symbol's
+    import scala.jdk.CollectionConverters._
+    val stacked = "(?s)/\\*\\*(?:(?!\\*/).)*\\*/\\s*(?=/\\*\\*)".r
+    val orphans = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq.sorted
+      .flatMap { p =>
+        val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        stacked.findAllMatchIn(src)
+          .map(m => s"$p:${src.substring(0, m.start).count(_ == '\n') + 1}")
+      }
+    assert(orphans.isEmpty, s"doc comments attached to no definition: $orphans")
+  }
+
   test("graded-surface census matches the documented counts") {
     // NOTE: `exact` counts ORACLED queries (the local gate's surface).
     // The driver's hash_match count is the authoritative "exact" claim

@@ -3,9 +3,11 @@ package graft
 import graft.operators.{Dedup, Graphs}
 
 /** Connected-components semantics on handcrafted graphs the fixture's
-  * planted near-dup pairs don't exercise: chains (diameter > 1 forces
-  * real propagation rounds), cycles, disjoint components, and the
-  * pairs→clusters contract used by corpus dedup. */
+  * planted near-dup pairs don't exercise: chains (deep graphs force
+  * several large-star/small-star rounds), cycles, disjoint components,
+  * the pairs→clusters contract used by corpus dedup, and agreement of
+  * the distributed loop (pinned by `localFinishEdges = 0`) with the
+  * default one-task union-find finish — plus the other graph operators. */
 class GraphsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -14,7 +16,7 @@ class GraphsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("chain, cycle, and disjoint components all get min-id labels") {
-    // chain 1-2-3-4-5 (diameter 4: needs several propagation rounds),
+    // chain 1-2-3-4-5 (diameter 4: needs several rounds on the loop),
     // cycle 10-11-12-10, isolated edge 20-21
     val got = components(Seq(1L -> 2L, 2L -> 3L, 3L -> 4L, 4L -> 5L,
       10L -> 11L, 11L -> 12L, 12L -> 10L, 21L -> 20L))
@@ -48,24 +50,21 @@ class GraphsSpec extends SparkSpec {
       2L -> (2L, 2L), 4L -> (2L, 2L)), s"got $got")
   }
 
-  test("log-rounds variant == propagation == local finish on chains, cycles, random graphs") {
-    // four paths must agree bit-for-bit: pure propagation loop, pure
-    // log-star loop (localFinishEdges=0 pins both loops), and the two
-    // hybrid defaults that finish in the one-task union-find
+  test("distributed loop == local finish on a deep chain and a random graph") {
+    // both paths must agree bit-for-bit: the large-star/small-star loop
+    // (localFinishEdges=0 pins it) and the default, which finishes in
+    // the one-task union-find
     def all(edges: Seq[(Long, Long)]): Seq[Map[Long, Long]] = {
       val df = edges.toDF("src", "dst")
       def toMap(d: org.apache.spark.sql.DataFrame) =
         d.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       Seq(
-        toMap(Graphs.connectedComponents(df, "src", "dst", maxIter = 300,
+        toMap(Graphs.connectedComponents(df, "src", "dst",
           localFinishEdges = 0L)),
-        toMap(Graphs.connectedComponentsLogRounds(df, "src", "dst",
-          localFinishEdges = 0L)),
-        toMap(Graphs.connectedComponents(df, "src", "dst", maxIter = 300)),
-        toMap(Graphs.connectedComponentsLogRounds(df, "src", "dst")))
+        toMap(Graphs.connectedComponents(df, "src", "dst")))
     }
-    // deep chain: diameter 63 — log-rounds converges in ~log² rounds
-    // (50-round budget) where propagation needs one round per hop
+    // deep chain: diameter 63 — the loop converges in ~log² rounds
+    // inside the default 50-round budget, not one round per hop
     val chain = (1L until 64L).map(i => i -> (i + 1))
     val c = all(chain)
     assert(c.forall(_ == c.head) && c.head.values.forall(_ == 1L))
@@ -86,39 +85,41 @@ class GraphsSpec extends SparkSpec {
     // start from a clean slate so counts below are this test's own
     CheckpointBlocks.releaseAll(spark)
     val before = spark.sparkContext.getPersistentRDDs.size
-    // diameter-15 chain → ≥15 propagation rounds, each localCheckpoint'ed;
-    // without eager release every dead round's RDD would still sit in
-    // getPersistentRDDs afterward (ContextCleaner only frees them on GC)
+    // diameter-15 chain → several large-star/small-star rounds, each
+    // localCheckpoint'ed; without eager release every dead round's RDD
+    // would still sit in getPersistentRDDs afterward (ContextCleaner
+    // only frees them on GC)
     val chain = (1L until 16L).map(i => i -> (i + 1)).toDF("src", "dst")
-    val cc = Graphs.connectedComponents(chain, "src", "dst", maxIter = 40,
+    val cc = Graphs.connectedComponents(chain, "src", "dst",
       localFinishEdges = 0L)
     assert(cc.collect().forall(_.getLong(1) == 1L))
     val after = spark.sparkContext.getPersistentRDDs.size
     // only the returned result's own checkpoint may survive the call
     assert(after - before <= 1,
-      s"leaked ${after - before} persistent RDDs from ~15 checkpointed rounds")
+      s"leaked ${after - before} persistent RDDs from the checkpointed rounds")
     CheckpointBlocks.release(cc)
     assert(spark.sparkContext.getPersistentRDDs.size <= before,
       "result checkpoint not released")
-    // same discipline for the log-rounds variant
-    val cc2 = Graphs.connectedComponentsLogRounds(chain, "src", "dst",
-      localFinishEdges = 0L)
+    // the local-finish path must hold the same discipline (the
+    // union-find star forest is itself checkpointed, the input freed)
+    val cc2 = Graphs.connectedComponents(chain, "src", "dst")
     assert(cc2.collect().forall(_.getLong(1) == 1L))
     assert(spark.sparkContext.getPersistentRDDs.size - before <= 1,
-      "log-rounds variant leaked per-round checkpoints")
-    CheckpointBlocks.release(cc2)
-    // the hybrid local-finish paths must hold the same discipline (the
-    // union-find star forest is itself checkpointed, the input freed)
-    val cc3 = Graphs.connectedComponents(chain, "src", "dst")
-    assert(cc3.collect().forall(_.getLong(1) == 1L))
-    assert(spark.sparkContext.getPersistentRDDs.size - before <= 1,
       "local-finish path leaked blocks")
-    CheckpointBlocks.release(cc3)
-    val cc4 = Graphs.connectedComponentsLogRounds(chain, "src", "dst")
-    assert(cc4.collect().forall(_.getLong(1) == 1L))
-    assert(spark.sparkContext.getPersistentRDDs.size - before <= 1,
-      "log-rounds local-finish path leaked blocks")
-    CheckpointBlocks.release(cc4)
+    CheckpointBlocks.release(cc2)
+  }
+
+  test("a 40-node chain converges on the distributed loop within the default maxIter") {
+    // diameter 39: one round per hop would need 39 rounds; the
+    // large-star/small-star loop closes it in O(log²) rounds, well
+    // inside the default budget, with every node labeled 1
+    val chain = (1L until 40L).map(i => i -> (i + 1)).toDF("src", "dst")
+    val out = Graphs.connectedComponents(chain, "src", "dst",
+      localFinishEdges = 0L)
+    val cc = out.collect()
+    assert(cc.length == 40 && cc.forall(_.getLong(1) == 1L),
+      s"got ${cc.map(r => r.getLong(0) -> r.getLong(1)).toMap}")
+    graft.plans.CheckpointBlocks.release(out)
   }
 
   test("clusters over planted near-dups partition the pair graph") {
