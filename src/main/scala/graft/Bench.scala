@@ -108,7 +108,7 @@ object Bench {
     // non-query keys it does catch ("value","n_failed") are never query
     // names so the lookups below can't hit them.
     // COUPLING NOTE (ADVICE r10): this regex is matched to the writer
-    // format at line ~147 ("name":number, no spaces). It degrades SOFT
+    // format at line ~202 ("name":number, no spaces). It degrades SOFT
     // on format drift — an empty baseline silently disables the outlier
     // re-measure (never corrupts a measurement) — which is the accepted
     // trade for a zero-dependency parser; if the writer ever changes,

@@ -39,6 +39,21 @@ object Stats {
     * discretization first; this form is the exact-oracle variant. */
   def ksTwoSample(df: DataFrame, valueCol: String,
                   inA: Column, inB: Column): DataFrame = {
+    ecdfGapSpine(df, valueCol, inA, inB)
+      .agg(max("n1").as("n1"), max("n2").as("n2"),
+        max(abs(col("c1") * col("n2") - col("c2") * col("n1"))).as("d_num"))
+      .select(col("n1"), col("n2"), col("d_num"),
+        (col("d_num").cast("double") /
+          (col("n1") * col("n2")).cast("double")).as("d_stat"))
+  }
+
+  /** The merged distinct-value spine [[ksTwoSample]] and
+    * [[kuiperTwoSample]] share: per value of `valueCol`, the running
+    * counts (c1, c2) of samples A and B up to and including it, with the
+    * sample sizes (n1, n2) broadcast onto every row. Rows in neither
+    * sample are dropped first. */
+  private def ecdfGapSpine(df: DataFrame, valueCol: String,
+                           inA: Column, inB: Column): DataFrame = {
     val f = df.select(col(valueCol).as("v"),
         when(inA, 1L).otherwise(0L).as("in1"),
         when(inB, 1L).otherwise(0L).as("in2"))
@@ -48,11 +63,6 @@ object Stats {
       Seq("a1" -> "c1", "a2" -> "c2")).select("c1", "c2")
     val tot = f.agg(sum("in1").as("n1"), sum("in2").as("n2"))
     cum.crossJoin(broadcast(tot))
-      .agg(max("n1").as("n1"), max("n2").as("n2"),
-        max(abs(col("c1") * col("n2") - col("c2") * col("n1"))).as("d_num"))
-      .select(col("n1"), col("n2"), col("d_num"),
-        (col("d_num").cast("double") /
-          (col("n1") * col("n2")).cast("double")).as("d_stat"))
   }
 
   /** Population Stability Index between a reference and a current
@@ -1093,15 +1103,7 @@ object Stats {
     * hash-agg to distinct values + [[Rank.withCumSums]]. */
   def kuiperTwoSample(df: DataFrame, valueCol: String,
                       inA: Column, inB: Column): DataFrame = {
-    val f = df.select(col(valueCol).as("v"),
-        when(inA, 1L).otherwise(0L).as("in1"),
-        when(inB, 1L).otherwise(0L).as("in2"))
-      .where(col("in1") === 1L || col("in2") === 1L)
-    val perV = f.groupBy("v").agg(sum("in1").as("a1"), sum("in2").as("a2"))
-    val cum = Rank.withCumSums(perV, Seq("v"),
-      Seq("a1" -> "c1", "a2" -> "c2")).select("c1", "c2")
-    val tot = f.agg(sum("in1").as("n1"), sum("in2").as("n2"))
-    cum.crossJoin(broadcast(tot))
+    ecdfGapSpine(df, valueCol, inA, inB)
       .agg(max("n1").as("n1"), max("n2").as("n2"),
         max(col("c1") * col("n2") - col("c2") * col("n1")).as("d_plus_num"),
         max(col("c2") * col("n1") - col("c1") * col("n2")).as("d_minus_num"))

@@ -216,13 +216,15 @@ object Ext10 extends QuerySet {
             (dec12(col("cnt")) * dec12(col("cnt")) * dec12(col("cnt")) -
               dec12(col("cnt"))).as(s"tt_$c"))
       }
+      // each spine once: withCumSums persists it, so the join and the
+      // tie sums share one range-partitioned plan per metric
+      val (sp1, sp2, sp3) = (spine("v1"), spine("v2"), spine("v3"))
       val ranked = per
-        .join(spine("v1"), Seq("v1")).join(spine("v2"), Seq("v2"))
-        .join(spine("v3"), Seq("v3"))
+        .join(sp1, Seq("v1")).join(sp2, Seq("v2")).join(sp3, Seq("v3"))
         .select((col("r2_v1") + col("r2_v2") + col("r2_v3")).as("r2s"))
-      val tie1 = spine("v1").agg(sum("tt_v1").as("t1"))
-      val tie2 = spine("v2").agg(sum("tt_v2").as("t2"))
-      val tie3 = spine("v3").agg(sum("tt_v3").as("t3"))
+      val tie1 = sp1.agg(sum("tt_v1").as("t1"))
+      val tie2 = sp2.agg(sum("tt_v2").as("t2"))
+      val tie3 = sp3.agg(sum("tt_v3").as("t3"))
       val dd = (c: Column) => c.cast("string").cast("double")
       ranked.agg(count(lit(1)).as("n"),
           sum(col("r2s").cast("decimal(38,0)") * col("r2s")).as("s4"))

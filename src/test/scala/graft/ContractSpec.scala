@@ -64,6 +64,25 @@ class ContractSpec extends SparkSpec {
       s"sessions built outside graft.Session: $builders")
   }
 
+  test("the bounded-replay harness lives only in StreamOps") {
+    // memory sinks, sink-view drops and the state-store provider belong
+    // to StreamOps.drain / withStreamConf, so every replay's conf scope
+    // and finally-stop are written once
+    import scala.jdk.CollectionConverters._
+    val harness = Seq("format(\"memory\")", "dropTempView",
+      "RocksDBStateStoreProvider")
+    val home = java.nio.file.Paths.get("src/main/scala/graft/streaming/StreamOps.scala")
+    val sites = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .filter(_ != home).toSeq.sorted
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if harness.exists(line.contains) => s"$p:${i + 1}"
+        }
+      }
+    assert(sites.isEmpty, s"bounded-replay harness outside StreamOps: $sites")
+  }
+
   test("every scaladoc sits on a definition, not on another doc comment") {
     // a doc comment followed (blank lines aside) by another doc comment
     // is orphaned: scaladoc attaches only the second one, so the first

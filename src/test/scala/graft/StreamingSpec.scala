@@ -25,8 +25,8 @@ class StreamingSpec extends SparkSpec {
       .schema(spark.read.parquet(s"$sf/events.parquet").schema)
       .parquet(dir.toString)
     val ev = Tables.normalizeEventTs(raw)
-    StreamOps.replayToMemory(spark, StreamOps.windowedCounts(ev), "win_stream")
-    val streamed = spark.table("win_stream")
+    val streamed = StreamOps.drain(spark, StreamOps.windowedCounts(ev),
+      "win_stream", "complete")
     val batch = batchEv.groupBy(
       date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH:mm:ss").as("hour"),
       col("event_type"))
@@ -34,6 +34,40 @@ class StreamingSpec extends SparkSpec {
         sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
     assert(streamed.exceptAll(batch).count() == 0 &&
       batch.exceptAll(streamed).count() == 0)
+  }
+
+  test("drain: a reused sink name returns only the latest run; confs and queries are left as found, also when the plan throws") {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+    val before = keys.map(spark.conf.getOption)
+    def staged(n: Int, tag: String) = {
+      val dir = StreamOps.tempStreamDir("graft_drain_spec").toString
+      spark.range(n).select(col("id"), lit(tag).as("tag"))
+        .coalesce(1).write.mode("overwrite").parquet(dir)
+      spark.readStream.schema(spark.read.parquet(dir).schema).parquet(dir)
+    }
+    var scoped = Seq.empty[Option[String]]
+    val first = StreamOps.drain(spark, staged(3, "a"), "drain_spec_mem", "append",
+      drive = { q => q.processAllAvailable(); scoped = keys.map(spark.conf.getOption) })
+    assert(scoped == Seq(Some("8"),
+      Some("org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"),
+      Some("true")))
+    assert(first.count() == 3)
+    val second = StreamOps.drain(spark, staged(5, "b"), "drain_spec_mem", "append")
+    assert(second.groupBy("tag").count().as[(String, Long)].collect().toSeq ==
+      Seq(("b", 5L)))
+    assert(keys.map(spark.conf.getOption) == before)
+    assert(spark.streams.active.isEmpty)
+
+    val boom = udf((x: Long) =>
+      if (x >= 0) throw new IllegalStateException("boom") else x)
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      StreamOps.drain(spark, staged(2, "c").select(boom(col("id"))),
+        "drain_spec_fail", "append")
+    }
+    assert(keys.map(spark.conf.getOption) == before)
+    assert(spark.streams.active.isEmpty)
   }
 
   test("streaming dedup drops repeated fingerprints, keeps state bounded") {
