@@ -124,30 +124,59 @@ object Io {
     * logging and moving on); a production runner wants that as a POLICY,
     * not a hardcoded choice — silent table drops corrupt downstream joins,
     * but one poisoned table shouldn't always sink a 50-table load either.
-    *  - [[ErrorPolicy.FailFast]] (default): first failure propagates.
-    *  - [[ErrorPolicy.Continue]]: remaining tables still load; failures
-    *    are RETURNED (never swallowed) for the caller to alert on. */
+    * A layer's tables are written concurrently (see [[guarded]]), so both
+    * policies attempt EVERY table of the layer:
+    *  - [[ErrorPolicy.FailFast]] (default): once the layer's writes have
+    *    all finished, the first failure in table order is rethrown.
+    *  - [[ErrorPolicy.Continue]]: all failures are RETURNED in table
+    *    order (never swallowed) for the caller to alert on. */
   sealed trait ErrorPolicy
   object ErrorPolicy {
     case object FailFast extends ErrorPolicy
     case object Continue extends ErrorPolicy
   }
 
-  private def guarded(policy: ErrorPolicy)
-                     (steps: Seq[(String, () => Unit)]): Seq[(String, Throwable)] =
-    steps.flatMap { case (name, run) =>
-      try { run(); Nil }
-      catch {
-        // NonFatal only: an OOM/interrupt must crash the runner, not be
-        // filed away as a per-table failure on a broken JVM
-        case scala.util.control.NonFatal(e) if policy == ErrorPolicy.Continue =>
-          Seq(name -> e)
-      }
+  /** Runs one layer's table steps concurrently and returns the failures
+    * in step order (see [[ErrorPolicy]]).
+    *
+    * Each step is one small Spark job whose fixed cost (planning, job
+    * submission, commit) sits on the driver; submitted together, one
+    * step's tasks run while another plans or commits. The pool is made
+    * per call, one daemon thread per step (a layer has at most 6 tables):
+    * the calling thread creates them, so each inherits the caller's
+    * SparkContext local properties (job group, scheduler pool) as they
+    * are at this call, where the threads of a long-lived pool would keep
+    * the ones set when they were first made, such as a stale
+    * `spark.sql.execution.id`. Every step is awaited before the pool is
+    * shut down. A fatal error (OOM, interrupt) is rethrown as it is,
+    * never filed as a per-table failure on a broken JVM. */
+  private[graft] def guarded(policy: ErrorPolicy)
+                            (steps: Seq[(String, () => Unit)]): Seq[(String, Throwable)] = {
+    import java.util.concurrent.{Callable, ExecutionException, Executors}
+    import scala.jdk.CollectionConverters._
+    val pool = Executors.newFixedThreadPool(steps.size, (r: Runnable) => {
+      val t = new Thread(r, "graft-layer")
+      t.setDaemon(true)
+      t
+    })
+    // invokeAll returns once every step has finished, in step order
+    val done = try pool.invokeAll(steps.map { case (_, run) =>
+      new Callable[Unit] { def call(): Unit = run() }
+    }.asJava) finally pool.shutdownNow()
+    val failures = steps.map(_._1).zip(done.asScala).flatMap { case (name, f) =>
+      try { f.get(); Nil }
+      catch { case e: ExecutionException => Seq(name -> e.getCause) }
     }
+    failures.find(f => !scala.util.control.NonFatal(f._2)).foreach(f => throw f._2)
+    if (policy == ErrorPolicy.FailFast) failures.headOption.foreach(f => throw f._2)
+    failures
+  }
 
-  /** Bronze (§3.1): raw CSV → parquet, one narrow no-shuffle job per table.
-    * Returns the per-table failures under [[ErrorPolicy.Continue]]
-    * (empty on success); propagates the first under FailFast. */
+  /** Bronze (§3.1): raw CSV → parquet, one narrow no-shuffle job per
+    * table, the 6 jobs submitted together. Returns the per-table failures
+    * in table order under [[ErrorPolicy.Continue]] (empty on success);
+    * under FailFast every table is still attempted, then the first
+    * failure in table order is rethrown. */
   def runBronze(spark: SparkSession, rawDir: String, bronzeDir: String,
                 policy: ErrorPolicy = ErrorPolicy.FailFast): Seq[(String, Throwable)] =
     guarded(policy)(tables.map { t =>
@@ -155,7 +184,8 @@ object Io {
         readCsv(spark, s"$rawDir/$t", Schemas.all(t)), s"$bronzeDir/$t"))
     })
 
-  /** Silver (§3.2): per-table cleanse, still shuffle-free. */
+  /** Silver (§3.2): per-table cleanse, still shuffle-free, the 6 jobs
+    * submitted together; failures as in [[runBronze]]. */
   def runSilver(spark: SparkSession, bronzeDir: String, silverDir: String,
                 asOf: String, asOfYear: Int,
                 policy: ErrorPolicy = ErrorPolicy.FailFast): Seq[(String, Throwable)] = {
@@ -169,23 +199,29 @@ object Io {
       "payments" -> (() => writeParquet(Silver.payments(rd("payments")), s"$silverDir/payments"))))
   }
 
-  /** Gold (§3.3): the dimensional model. */
+  /** Gold (§3.3): the dimensional model, the 4 table writes submitted
+    * together. Every table is attempted, then the first failure in table
+    * order is rethrown ([[ErrorPolicy.FailFast]]). */
   def runGold(spark: SparkSession, silverDir: String, goldDir: String): Unit = {
     def rd(t: String) = readParquet(spark, s"$silverDir/$t")
-    writeParquet(Gold.dimClients(rd("clients"), rd("crm_clients")), s"$goldDir/dim_clients")
-    writeParquet(Gold.dimVehicles(rd("vehicles")), s"$goldDir/dim_vehicles")
-    writeParquet(Gold.factClientSummary(rd("clients"), rd("policies"),
-      rd("payments"), rd("claims")), s"$goldDir/fact_client_summary")
-    writeParquet(Gold.factPayments(rd("payments"), rd("policies")), s"$goldDir/fact_payments")
+    guarded(ErrorPolicy.FailFast)(Seq(
+      "dim_clients" -> (() => writeParquet(Gold.dimClients(rd("clients"), rd("crm_clients")),
+        s"$goldDir/dim_clients")),
+      "dim_vehicles" -> (() => writeParquet(Gold.dimVehicles(rd("vehicles")), s"$goldDir/dim_vehicles")),
+      "fact_client_summary" -> (() => writeParquet(Gold.factClientSummary(rd("clients"),
+        rd("policies"), rd("payments"), rd("claims")), s"$goldDir/fact_client_summary")),
+      "fact_payments" -> (() => writeParquet(Gold.factPayments(rd("payments"), rd("policies")),
+        s"$goldDir/fact_payments"))))
   }
 
   /** Full medallion pipeline: generate → bronze → silver → gold. */
   def runAll(spark: SparkSession, baseDir: String, scale: Double = 1.0,
              seed: Long = 42, asOf: String = "2026-01-01 00:00:00",
              asOfYear: Int = 2026): Unit = {
-    Gen.all(spark, scale, seed).foreach { case (t, df) =>
-      writeCsv(df, s"$baseDir/raw/$t")
-    }
+    val gen = Gen.all(spark, scale, seed)
+    guarded(ErrorPolicy.FailFast)(tables.map { t =>
+      t -> (() => writeCsv(gen(t), s"$baseDir/raw/$t"))
+    })
     runBronze(spark, s"$baseDir/raw", s"$baseDir/bronze")
     runSilver(spark, s"$baseDir/bronze", s"$baseDir/silver", asOf, asOfYear)
     runGold(spark, s"$baseDir/silver", s"$baseDir/gold")

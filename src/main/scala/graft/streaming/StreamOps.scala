@@ -404,8 +404,8 @@ object StreamOps {
     q
   }
 
-  /** Temp dir for a bounded stream replay, registered on the single
-    * exit-time sweep above. */
+  /** Temp dir for a bounded stream replay (or a test's staged files),
+    * registered on the single exit-time sweep above. */
   def tempStreamDir(prefix: String): java.nio.file.Path = {
     val p = java.nio.file.Files.createTempDirectory(prefix)
     tempDirs.add(p)

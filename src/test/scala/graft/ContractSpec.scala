@@ -64,23 +64,37 @@ class ContractSpec extends SparkSpec {
       s"sessions built outside graft.Session: $builders")
   }
 
+  /** `file:line` of every line under src/main/scala, `home` excepted,
+    * that contains one of `needles`. */
+  private def sitesOutside(home: String, needles: Seq[String]): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val homePath = java.nio.file.Paths.get(home)
+    java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .filter(_ != homePath).toSeq.sorted
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if needles.exists(line.contains) => s"$p:${i + 1}"
+        }
+      }
+  }
+
   test("the bounded-replay harness lives only in StreamOps") {
     // memory sinks, sink-view drops and the state-store provider belong
     // to StreamOps.drain / withStreamConf, so every replay's conf scope
     // and finally-stop are written once
-    import scala.jdk.CollectionConverters._
-    val harness = Seq("format(\"memory\")", "dropTempView",
-      "RocksDBStateStoreProvider")
-    val home = java.nio.file.Paths.get("src/main/scala/graft/streaming/StreamOps.scala")
-    val sites = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-      .iterator.asScala.filter(_.toString.endsWith(".scala"))
-      .filter(_ != home).toSeq.sorted
-      .flatMap { p =>
-        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if harness.exists(line.contains) => s"$p:${i + 1}"
-        }
-      }
+    val sites = sitesOutside("src/main/scala/graft/streaming/StreamOps.scala",
+      Seq("format(\"memory\")", "dropTempView", "RocksDBStateStoreProvider"))
     assert(sites.isEmpty, s"bounded-replay harness outside StreamOps: $sites")
+  }
+
+  test("the one driver-side thread pool lives in Io") {
+    // Io.guarded submits a medallion layer's writes together from a pool
+    // made per call; a second pool elsewhere would hold threads whose
+    // SparkContext local properties go stale between calls
+    val sites = sitesOutside("src/main/scala/graft/sources/Io.scala",
+      Seq("Executors.", "ExecutionContext", "Future"))
+    assert(sites.isEmpty, s"driver-side thread pools outside Io: $sites")
   }
 
   test("every scaladoc sits on a definition, not on another doc comment") {

@@ -1,8 +1,8 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.sources.{Gen, Io}
+import graft.streaming.StreamOps.tempStreamDir
 
 /** End-to-end medallion pipeline test (SURVEY.md §5): seeded generator →
   * bronze → silver → gold on local FS, asserting the reference's own
@@ -10,7 +10,7 @@ import graft.sources.{Gen, Io}
 class PipelineSpec extends SparkSpec {
 
   private lazy val base: String = {
-    val dir = Files.createTempDirectory("graft_e2e").toString
+    val dir = tempStreamDir("graft_e2e").toString
     Io.runAll(spark, dir, scale = 0.1, seed = 42,
       asOf = "2026-01-01 00:00:00", asOfYear = 2026)
     dir
@@ -26,7 +26,7 @@ class PipelineSpec extends SparkSpec {
 
   test("JSONL round-trip preserves documents exactly (incl. nulls)") {
     val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
-    val dir = Files.createTempDirectory("graft_jsonl").toString
+    val dir = tempStreamDir("graft_jsonl").toString
     Io.writeJsonl(docs, s"$dir/docs")
     val back = Io.readJsonl(spark, s"$dir/docs", docs.schema)
     assert(back.count() == docs.count())
@@ -37,7 +37,7 @@ class PipelineSpec extends SparkSpec {
 
   test("ORC round-trip preserves lineitem exactly") {
     val li = Tables.load(spark, "/root/testdata/sf0.001", "lineitem")
-    val dir = Files.createTempDirectory("graft_orc").toString
+    val dir = tempStreamDir("graft_orc").toString
     Io.writeOrc(li, s"$dir/li")
     val back = Io.readOrc(spark, s"$dir/li")
     assert(back.schema == li.schema)
@@ -46,7 +46,7 @@ class PipelineSpec extends SparkSpec {
 
   test("XML round-trip preserves customers exactly (incl. nulls via schema)") {
     val cust = Tables.load(spark, "/root/testdata/sf0.001", "customer")
-    val dir = Files.createTempDirectory("graft_xml").toString
+    val dir = tempStreamDir("graft_xml").toString
     Io.writeXml(cust, s"$dir/cust")
     val back = Io.readXml(spark, s"$dir/cust", cust.schema)
     assert(back.schema == cust.schema)
@@ -55,20 +55,46 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("error policy: FailFast throws, Continue isolates the bad table") {
-    // raw dir missing the vehicles table entirely
-    val dir = Files.createTempDirectory("graft_policy").toString
-    Gen.all(spark, 0.02, 7L).filter(_._1 != "vehicles").foreach {
-      case (t, df) => Io.writeCsv(df, s"$dir/raw/$t")
-    }
-    intercept[Exception] {
+    // raw dir missing the vehicles and claims tables entirely
+    val dir = tempStreamDir("graft_policy").toString
+    Gen.all(spark, 0.02, 7L).filter(t => t._1 != "vehicles" && t._1 != "claims")
+      .foreach { case (t, df) => Io.writeCsv(df, s"$dir/raw/$t") }
+    val landed = Seq("clients", "crm_clients", "policies", "payments")
+    // FailFast attempts every table, then rethrows the first failure in
+    // table order, whichever of the two failed first in time
+    val ff = intercept[Exception] {
       Io.runBronze(spark, s"$dir/raw", s"$dir/bronze_ff")
     }
+    assert(ff.getMessage.contains("/raw/vehicles"), ff.getMessage)
+    for (t <- landed) assert(spark.read.parquet(s"$dir/bronze_ff/$t").count() > 0, t)
     val failures = Io.runBronze(spark, s"$dir/raw", s"$dir/bronze_cont",
       Io.ErrorPolicy.Continue)
-    assert(failures.map(_._1) == Seq("vehicles"), s"got $failures")
+    assert(failures.map(_._1) == Seq("vehicles", "claims"), s"got $failures")
     // every other table still landed
-    for (t <- Seq("clients", "crm_clients", "policies", "claims", "payments"))
-      assert(spark.read.parquet(s"$dir/bronze_cont/$t").count() > 0, t)
+    for (t <- landed) assert(spark.read.parquet(s"$dir/bronze_cont/$t").count() > 0, t)
+  }
+
+  test("a layer's table steps run concurrently") {
+    // each step waits for the other: run one after another, the first
+    // times out and fails instead of hanging
+    val both = new java.util.concurrent.CountDownLatch(2)
+    def step(): Unit = {
+      both.countDown()
+      assert(both.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "steps ran one after another")
+    }
+    val failures = Io.guarded(Io.ErrorPolicy.FailFast)(
+      Seq("a" -> (() => step()), "b" -> (() => step())))
+    assert(failures.isEmpty)
+  }
+
+  test("a fatal error in a step is rethrown as it is, also under Continue") {
+    val oom = new OutOfMemoryError("step")
+    val thrown = intercept[OutOfMemoryError] {
+      Io.guarded(Io.ErrorPolicy.Continue)(
+        Seq("ok" -> (() => ()), "fatal" -> (() => throw oom)))
+    }
+    assert(thrown eq oom)
   }
 
   test("silver vehicles/policies have no null FKs (F2/F3)") {
@@ -153,7 +179,7 @@ class PipelineSpec extends SparkSpec {
   test("parquet schema evolution: mergeSchema unions old and new writers") {
     import spark.implicits._
     import graft.sources.Io
-    val dir = java.nio.file.Files.createTempDirectory("evolve").toString
+    val dir = tempStreamDir("evolve").toString
     Seq((1L, "a")).toDF("id", "v1").write.parquet(dir + "/batch=1")
     Seq((2L, "b", 3.5)).toDF("id", "v1", "v2").write.parquet(dir + "/batch=2")
     val merged = Io.readParquetEvolved(spark, dir)
@@ -166,7 +192,7 @@ class PipelineSpec extends SparkSpec {
 
   test("robust CSV read: corrupt rows quarantined in PERMISSIVE, gone in DROPMALFORMED") {
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dirty_csv")
+    val dir = tempStreamDir("graft_dirty_csv")
     java.nio.file.Files.writeString(dir.resolve("data.csv"),
       "id,amount\n1,10.5\nnot_a_number_row,,,\n3,oops\n4,7.25\n")
     val schema = StructType(Seq(StructField("id", LongType),

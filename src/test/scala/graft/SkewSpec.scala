@@ -144,7 +144,7 @@ class SkewSpec extends SparkSpec {
   }
 
   test("sizedParallelism prices a frame by the advisory partition size") {
-    val dir = java.nio.file.Files.createTempDirectory("sized").toString
+    val dir = graft.streaming.StreamOps.tempStreamDir("sized").toString
     spark.range(0L, 20000L, 1L, 1).write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir) // ~80 kb of file bytes
     val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"

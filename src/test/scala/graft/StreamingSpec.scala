@@ -15,7 +15,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming windowed counts == batch tumbling aggregate") {
     val batchEv = Tables.load(spark, sf, "events")
     // FileStreamSource needs a directory: stage the single parquet there
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream")
+    val dir = StreamOps.tempStreamDir("graft_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -71,7 +71,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming dedup drops repeated fingerprints, keeps state bounded") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dedup_stream")
+    val dir = StreamOps.tempStreamDir("graft_dedup_stream")
     // events with duplicated user_id%7 fingerprints within one batch
     Tables.load(spark, sf, "events")
       .select(col("ts"), (col("user_id") % 7).cast("string").as("fp"))
@@ -91,7 +91,7 @@ class StreamingSpec extends SparkSpec {
 
   test("watermark drops late events (append-mode windowed agg)") {
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft_late")
+    val dir = StreamOps.tempStreamDir("graft_late")
     val schema = StructType(Seq(
       StructField("ts", TimestampType), StructField("v", DoubleType)))
     def write(name: String, rows: Seq[(String, Double)]): Unit = {
@@ -122,7 +122,7 @@ class StreamingSpec extends SparkSpec {
 
   test("stream-stream click->purchase join == batch join") {
     val ev = Tables.load(spark, sf, "events")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ssj")
+    val dir = StreamOps.tempStreamDir("graft_ssj")
     for (side <- Seq("click", "purchase"))
       ev.filter(col("event_type") === side)
         .select("user_id", "event_id", "ts")
@@ -182,7 +182,7 @@ class StreamingSpec extends SparkSpec {
       df.groupBy("user_id").agg(
         sum(col("value").cast("decimal(18,2)")).as("total_value"),
         count(lit(1)).as("n"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_fb_sink")
+    val dir = StreamOps.tempStreamDir("graft_fb_sink")
     // three files -> three micro-batches (maxFilesPerTrigger=1): the sink
     // must merge across genuinely separate foreachBatch invocations
     ev.repartition(3).write.mode("overwrite").parquet(s"$dir/in")
@@ -223,7 +223,7 @@ class StreamingSpec extends SparkSpec {
     val sentinel = Seq((-1L, new java.sql.Timestamp(
       maxTs + (spanH + 2) * 3600000L), -1L, 0.0))
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_ewma_stream")
+    val dir = StreamOps.tempStreamDir("graft_ewma_stream")
     def write(name: String, part: Seq[(Long, java.sql.Timestamp, Long, Double)]): Unit =
       part.toDF("user_id", "ts", "event_id", "value").coalesce(1)
         .write.mode("overwrite").parquet(s"$dir/in/$name")
@@ -288,7 +288,7 @@ class StreamingSpec extends SparkSpec {
     val sentinel = Seq((-1L, new java.sql.Timestamp(
       maxTs + (spanH + 2) * 3600000L)))
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_sess_stream")
+    val dir = StreamOps.tempStreamDir("graft_sess_stream")
     def write(name: String, part: Seq[(Long, java.sql.Timestamp)]): Unit =
       part.toDF("user_id", "ts").coalesce(1)
         .write.mode("overwrite").parquet(s"$dir/in/$name")
@@ -345,7 +345,7 @@ class StreamingSpec extends SparkSpec {
     val sentinel = Seq((-1L, new java.sql.Timestamp(
       maxTs + (spanH + 2) * 3600000L), -1L, "x"))
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_path_stream")
+    val dir = StreamOps.tempStreamDir("graft_path_stream")
     def write(name: String,
               part: Seq[(Long, java.sql.Timestamp, Long, String)]): Unit =
       part.toDF("user_id", "ts", "event_id", "event_type").coalesce(1)
@@ -389,7 +389,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("native session_window: streaming append emits a subset of the batch sessions, gap-merged identically") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sw_stream")
+    val dir = StreamOps.tempStreamDir("graft_sw_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -600,7 +600,7 @@ class StreamingSpec extends SparkSpec {
     val ev = Tables.load(spark, sf, "events")
       .select(col("event_type"), col("ts"), col("value"))
     val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_evict_spec")
+    val dir = StreamOps.tempStreamDir("graft_evict_spec")
     try {
       ev.coalesce(1).write.mode("overwrite").parquet(s"$dir/in/b1")
       val src = spark.readStream.schema(ev.schema)
@@ -658,7 +658,7 @@ class StreamingSpec extends SparkSpec {
     val bounds = ev.agg(min(col("ts")), max(col("ts"))).head()
     val spanH = (bounds.getTimestamp(1).getTime -
       bounds.getTimestamp(0).getTime) / 3600000L + 2
-    val dir = java.nio.file.Files.createTempDirectory("graft_crash_restart")
+    val dir = StreamOps.tempStreamDir("graft_crash_restart")
     try {
       val (in, out, ckpt) = (s"$dir/in", s"$dir/out", s"$dir/ckpt")
       ev.repartition(8).write.mode("overwrite").parquet(in)

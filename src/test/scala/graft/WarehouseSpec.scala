@@ -1,8 +1,8 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.sources.Warehouse
+import graft.streaming.StreamOps.tempStreamDir
 
 /** Warehouse layout features: partition pruning and shuffle-free bucketed
   * joins — the write-time optimizations that matter at 100 TB. */
@@ -11,7 +11,7 @@ class WarehouseSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("partitioned sink prunes at the scan") {
-    val dir = Files.createTempDirectory("graft_part").toString
+    val dir = tempStreamDir("graft_part").toString
     val events = Tables.load(spark, sf, "events")
     Warehouse.writePartitioned(events, dir, "event_type")
     val clicks = spark.read.parquet(dir).filter(col("event_type") === "click")
@@ -26,7 +26,7 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("bucketed tables join with zero Exchange") {
-    val dir = Files.createTempDirectory("graft_bucket").toString
+    val dir = tempStreamDir("graft_bucket").toString
     val orders = Tables.load(spark, sf, "orders")
     val lineitem = Tables.load(spark, sf, "lineitem")
       .withColumnRenamed("l_orderkey", "o_orderkey")
@@ -68,9 +68,9 @@ class WarehouseSpec extends SparkSpec {
       .select(col("o_orderkey") % 1024 as "x",
         floor(col("o_totalprice") / lit(500.0)).cast("long") % 1024 as "y")
     val nFiles = 16
-    val zDir = Files.createTempDirectory("graft_z").toString
+    val zDir = tempStreamDir("graft_z").toString
     Warehouse.writeZOrdered(orders, zDir, "x", "y", 10, nFiles)
-    val oneDir = Files.createTempDirectory("graft_onedim").toString
+    val oneDir = tempStreamDir("graft_onedim").toString
     orders.repartitionByRange(nFiles, col("x")).sortWithinPartitions("x")
       .write.mode("overwrite").parquet(oneDir)
 
@@ -190,8 +190,8 @@ class WarehouseSpec extends SparkSpec {
 
   test("compaction collapses a small-file table, preserving content exactly") {
     import spark.implicits._
-    val in = Files.createTempDirectory("graft_frag").toString
-    val out = Files.createTempDirectory("graft_compact").toString
+    val in = tempStreamDir("graft_frag").toString
+    val out = tempStreamDir("graft_compact").toString
     // fragment: 64 files for ~6k tiny rows (the streaming-sink pathology)
     val df = spark.range(6000).select(col("id"),
       (col("id") % 97).as("k"), md5(col("id").cast("string")).as("payload"))
