@@ -27,13 +27,14 @@ object Graphs {
     *
     * Scale shape: each operation is one groupBy + one join on the node
     * key — fully distributed, no driver-side graph — and the edge set
-    * monotonically contracts to one star per component. Each round is
-    * localCheckpoint'ed EAGERLY: persist alone caches the data but leaves
-    * the logical plan growing by a join per round, and a few hundred
-    * rounds of nested plan blow the driver heap just stringifying the
-    * tree. Convergence = edge set unchanged (the count that materializes
-    * the checkpoint; a set compare only once the monotone count
-    * stabilizes). Once the edge set fits one task
+    * monotonically contracts to one star per component. The rounds run
+    * in [[CheckpointBlocks.iterate]], which checkpoints each one
+    * eagerly: persist alone caches the data but leaves the logical plan
+    * growing by a join per round, and a few hundred rounds of nested
+    * plan blow the driver heap just stringifying the tree. Convergence =
+    * edge set unchanged (the count that materializes the checkpoint; a
+    * set compare only once the monotone count stabilizes). Once the
+    * edge set fits one task
     * (`localFinishEdges`, integral ids) the rest is solved by the
     * single-task union-find finish [[localStarForest]], bit-identical to
     * the loop; specs pass `localFinishEdges = 0` to pin the loop.
@@ -63,68 +64,34 @@ object Graphs {
         .distinct()
     }
     // the input pair pipeline can be expensive (minhash banding, LSH
-    // verify, ...): evaluate it ONCE — one count-to-materialize action —
-    // into a checkpointed, deduped edge frame, and derive the node table,
-    // the local-finish gate and the first round from those blocks.
-    // Self-loops stay in `base` (they name nodes); largeStar drops them.
-    val (base, baseCount) = CheckpointBlocks.checkpointCount(
-      edges.select(col(srcCol).as("u"), col(dstCol).as("v")).distinct())
+    // verify, ...): the seed evaluates it ONCE into a checkpointed,
+    // deduped edge frame `base`, which also names every node (self-loops
+    // stay in it; largeStar drops them) and so stays live to the end.
+    // Both steps map each edge to at most one edge and dedupe, so the
+    // edge count never grows: the shuffling set compare runs only once
+    // the count stops shrinking.
+    val (kept, _) = CheckpointBlocks.iterate("connectedComponents",
+      edges.select(col(srcCol).as("u"), col(dstCol).as("v")).distinct(),
+      maxIter, CheckpointBlocks.Retain.SeedAndLast,
+      fixpoint = Some((prev, cur) => prev.exists { case (p, n) =>
+        n == cur._2 && cur._1.exceptAll(p).limit(1).count() == 0 }),
+      finish = { case (cur, n) =>
+        Option.when(n <= localFinishEdges && integralIds(cur))(localStarForest(cur)) }
+    )(live => smallStar(largeStar(live.head)))
+    val (cur, base) = (kept.head, kept.last)
     val nodes = base.select(col("u").as("id"))
       .union(base.select(col("v").as("id"))).distinct()
-    // `base` feeds `nodes` until the result is materialized: round
-    // frames are released as they die, `base` only at the end
-    def drop(f: DataFrame): Unit = if (f ne base) CheckpointBlocks.release(f)
-    var cur = base
-    var curCount = baseCount
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIter) {
-      if (curCount <= localFinishEdges && integralIds(cur)) {
-        // hybrid finish: the remaining graph fits one task — solve it
-        // with a single union-find job instead of more rounds
-        val fin = localStarForest(cur)
-        drop(cur)
-        cur = fin
-        converged = true
-      } else {
-        // Both steps map each input edge to AT MOST one output edge and
-        // then dedupe, so the edge count is monotone non-increasing —
-        // while it still shrinks (most rounds) the count that
-        // MATERIALIZES the checkpoint settles it (one action per round),
-        // and the shuffling exceptAll probe runs only once counts
-        // stabilize (equal-size distinct sets + empty one-sided
-        // difference ⇒ equal).
-        val (next, nextCount) =
-          CheckpointBlocks.checkpointCount(smallStar(largeStar(cur)))
-        converged = nextCount == curCount &&
-          next.exceptAll(cur).limit(1).count() == 0
-        // `next` is materialized: the dead round's checkpoint blocks can
-        // drop eagerly (Dataset.unpersist would be a no-op here — the
-        // CacheManager doesn't track checkpointed frames).
-        drop(cur)
-        cur = next
-        curCount = nextCount
-        it += 1
-      }
-    }
-    if (!converged) {
-      drop(cur); CheckpointBlocks.release(base)
-      throw new IllegalStateException(
-        s"connectedComponents: no fixpoint after $maxIter rounds")
-    }
     // fixpoint is a star forest directed big→small: u's neighbor IS its
     // root; roots have no outgoing edge and label themselves.
-    // Materialize BEFORE releasing cur/base: the lazy plan reads both
-    // frames' storage, and dropping blocks under a pending action works
-    // locally by timing luck only — on a busy cluster the blocks go
-    // first and the plan is unrecomputable. The result checkpoint is the
-    // method's only retained storage; the caller (or a bench harness via
+    // Materialize BEFORE releasing cur/base: a released checkpoint is
+    // unrecomputable. The result checkpoint is the method's only
+    // retained storage; the caller (or a bench harness via
     // CheckpointBlocks.releaseAll) frees it when done.
     val out = nodes.join(cur.select(col("u").as("id"), col("v").as("component")),
       Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))
       .localCheckpoint(true)
-    drop(cur); CheckpointBlocks.release(base)
+    kept.foreach(CheckpointBlocks.release(_))
     out
   }
   /** HITS hubs & authorities (Kleinberg '99) on a directed bipartite-ish
@@ -768,9 +735,11 @@ object Graphs {
     *
     * Scale shape per round: one degree aggregation + two semi-joins to
     * induce the survivor subgraph — all keyed on the node; rounds ≤ the
-    * peeling depth (typically small). Same storage discipline as the
-    * other iterative operators: per-round localCheckpoint + leaf block
-    * release. Returns the k-core's (id, degree) — degree measured IN
+    * peeling depth (typically small). The rounds run in
+    * [[CheckpointBlocks.iterate]], which refuses (IllegalStateException)
+    * a peel still shrinking after `maxIter` rounds. Once the edge set
+    * fits one task the [[localKCoreEdges]] finish ends the peel. Returns
+    * the k-core's (id, degree) — degree measured IN
     * the core. Iterative deletion has no single-query SQL form, so the
     * graded query is rows-only; GraphsSpec proves equivalence with a
     * brute-force sequential peel. */
@@ -778,45 +747,31 @@ object Graphs {
             k: Int, maxIter: Int = 100,
             localFinishEdges: Long = KCoreLocalFinishEdges): DataFrame = {
     require(k >= 1, s"kCore: k must be >= 1, got $k")
-    // one action: count-to-materialize (round 15, checkpointCount)
-    var (cur, curCount) = CheckpointBlocks.checkpointCount(
+    // peeling strictly shrinks the edge set until the fixpoint: equal
+    // counts of a monotone contraction mean no node fell below k
+    val (kept, _) = CheckpointBlocks.iterate("kCore",
       edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
         .filter(col("u") =!= col("v"))
         .select(least(col("u"), col("v")).as("u"),
           greatest(col("u"), col("v")).as("v"))
-        .distinct())
-    var stable = false
-    var it = 0
-    while (!stable && curCount > 0 && it < maxIter) {
-      if (curCount <= localFinishEdges && integralIds(cur)) {
-        val fin = localKCoreEdges(cur, k)
-        CheckpointBlocks.release(cur)
-        cur = fin
-        stable = true
-      } else {
-      val deg = cur.select(explode(array(col("u"), col("v"))).as("id"))
+        .distinct(),
+      maxIter, CheckpointBlocks.Retain.Last,
+      fixpoint = Some((prev, cur) => cur._2 == 0L || prev.exists(_._2 == cur._2)),
+      finish = { case (cur, n) =>
+        Option.when(n <= localFinishEdges && integralIds(cur))(localKCoreEdges(cur, k)) }
+    ) { live =>
+      val cur = live.head
+      val keep = cur.select(explode(array(col("u"), col("v"))).as("id"))
         .groupBy("id").agg(count(lit(1)).as("deg"))
-      val keep = deg.filter(col("deg") >= k).select("id")
-      // one action per round (round 15, checkpointCount)
-      val (next, nextCount) = CheckpointBlocks.checkpointCount(cur
-        .join(keep.select(col("id").as("u")), Seq("u"), "leftsemi")
+        .filter(col("deg") >= k).select("id")
+      cur.join(keep.select(col("id").as("u")), Seq("u"), "leftsemi")
         .join(keep.select(col("id").as("v")), Seq("v"), "leftsemi")
-        .select("u", "v"))
-      // peeling strictly shrinks the edge set until fixpoint; equal
-      // counts of a monotone contraction mean no node fell below k
-      stable = nextCount == curCount
-      CheckpointBlocks.release(cur)
-      cur = next
-      curCount = nextCount
-      it += 1
-      }
+        .select("u", "v")
     }
-    if (!stable && curCount > 0)
-      throw new IllegalStateException(s"kCore: no fixpoint after $maxIter rounds")
-    val out = cur.select(explode(array(col("u"), col("v"))).as("id"))
+    val out = kept.head.select(explode(array(col("u"), col("v"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("deg"))
       .localCheckpoint(true)
-    CheckpointBlocks.release(cur)
+    CheckpointBlocks.release(kept.head)
     out
   }
 
@@ -877,10 +832,8 @@ object Graphs {
     * frames (last two when undirected — the symmetric-adjacency
     * distance argument; all of them when directed) + a distinct — all
     * partitioned on the node key; no collect, no driver-side graph
-    * state. Rounds = min(eccentricity, maxHops).
-    * Storage follows the engine's iterative-operator discipline:
-    * every round's frames are localCheckpoint'ed (plan truncation) and
-    * dead rounds' blocks are dropped via the LogicalRDD leaf.
+    * state. Rounds = min(eccentricity, maxHops), run in
+    * [[CheckpointBlocks.iterate]], which keeps every non-empty level.
     *
     * Unreachable nodes are simply absent (no +inf sentinel rows).
     * Returns (id, dist). */
@@ -905,38 +858,22 @@ object Graphs {
       adj.unpersist()
       return out
     }
-    // level-frame BFS (round 14, the landmarkBetweenness discipline):
-    // each hop retains its own checkpointed level; the result is the
-    // lazy union of levels, so no cumulative dist frame is re-unioned
-    // and re-checkpointed per round — one fewer driver action per hop.
-    // Anti-join side: undirected graphs need only the last TWO levels
-    // (a neighbor of a dist-L node sits at dist L−1, L, or L+1 —
-    // triangle inequality on the multi-source set distance); directed
-    // graphs anti-join the union of ALL levels (an edge may lead
-    // arbitrarily far BACK toward the sources), which reads the same
-    // rows the old dist frame held, just without re-materializing them.
-    var levels = List(sources.select(col(idCol).as("id")).distinct()
-      .withColumn("dist", lit(0)).localCheckpoint(true))
-    var hop = 0
-    var exhausted = false
-    while (!exhausted && hop < maxHops) {
+    // level-frame BFS: the result is the union of the kept levels.
+    // Undirected graphs anti-join only the last TWO levels (a neighbor
+    // of a dist-L node sits at dist L−1, L, or L+1 — triangle
+    // inequality on the multi-source set distance); directed graphs
+    // anti-join ALL levels (an edge may lead arbitrarily far BACK
+    // toward the sources).
+    val (levels, _) = CheckpointBlocks.iterate("shortestPaths",
+      sources.select(col(idCol).as("id")).distinct().withColumn("dist", lit(0)),
+      maxHops, CheckpointBlocks.Retain.Levels) { levels =>
       val candidates = adj
         .join(levels.head.select(col("id").as("u")), Seq("u"))
         .select(col("v").as("id")).distinct()
       val seen = (if (directed) levels else levels.take(2))
         .map(_.select("id")).reduce(_ union _)
-      // one action per hop: count-to-materialize doubles as the
-      // emptiness probe (round 15, CheckpointBlocks.checkpointCount)
-      val (newly, nNew) = CheckpointBlocks.checkpointCount(
-        candidates.join(seen, Seq("id"), "left_anti")
-          .withColumn("dist", lit(hop + 1)))
-      if (nNew == 0L) {
-        CheckpointBlocks.release(newly)
-        exhausted = true
-      } else {
-        levels = newly :: levels
-        hop += 1
-      }
+      candidates.join(seen, Seq("id"), "left_anti")
+        .withColumn("dist", lit(levels.size))
     }
     adj.unpersist()
     levels.reduce(_ union _)
@@ -956,9 +893,9 @@ object Graphs {
     * simultaneous searches in ONE frontier frame, so each round is
     * still one equi-join keyed on the edge src + one left-anti against
     * the last two level frames (the [[shortestPaths]] discipline:
-    * adjacency cached partitioned on the join key, per-round
-    * localCheckpoint, early exit when the frontier drains; symmetric
-    * adjacency makes two levels the full visited filter). k is
+    * adjacency cached partitioned on the join key, rounds in
+    * [[CheckpointBlocks.iterate]], early exit when the frontier drains;
+    * symmetric adjacency makes two levels the full visited filter). k is
     * parameter-bounded; rounds ≤ min(diameter, maxHops).
     *
     * Float discipline: the readout is a per-(landmark, dist) INTEGER
@@ -984,32 +921,17 @@ object Graphs {
       .repartition(col("u")).dropDuplicates().persist()
     val landmarks = adj.select(col("u").as("lm")).distinct()
       .orderBy("lm").limit(k)
-    // level-frame BFS (round 14, the landmarkBetweenness discipline):
     // adj is symmetric, so the new-node anti-join needs only the last
-    // TWO level frames per landmark; the histogram reads the lazy
-    // union of levels — the per-round cumulative-dist checkpoint job
-    // is gone (one fewer driver action per hop)
-    var levels = List(landmarks.select(col("lm"), col("lm").as("id"))
-      .withColumn("dist", lit(0)).localCheckpoint(true))
-    var hop = 0
-    var exhausted = false
-    while (!exhausted && hop < maxHops) {
+    // TWO level frames per landmark; the histogram reads their union
+    val (levels, _) = CheckpointBlocks.iterate("landmarkCloseness",
+      landmarks.select(col("lm"), col("lm").as("id")).withColumn("dist", lit(0)),
+      maxHops, CheckpointBlocks.Retain.Levels) { levels =>
       val candidates = adj
         .join(levels.head.select(col("lm"), col("id").as("u")), Seq("u"))
         .select(col("lm"), col("v").as("id")).distinct()
       val seen = levels.take(2).map(_.select("lm", "id")).reduce(_ union _)
-      // one action per hop: count-to-materialize doubles as the
-      // emptiness probe (round 15, CheckpointBlocks.checkpointCount)
-      val (newly, nNew) = CheckpointBlocks.checkpointCount(
-        candidates.join(seen, Seq("lm", "id"), "left_anti")
-          .withColumn("dist", lit(hop + 1)))
-      if (nNew == 0L) {
-        CheckpointBlocks.release(newly)
-        exhausted = true
-      } else {
-        levels = newly :: levels
-        hop += 1
-      }
+      candidates.join(seen, Seq("lm", "id"), "left_anti")
+        .withColumn("dist", lit(levels.size))
     }
     adj.unpersist()
     val dist = levels.reduce(_ union _)
@@ -1044,9 +966,10 @@ object Graphs {
     * adjacency cached partitioned on the join key). Backward = one
     * level-d ⋈ adjacency ⋈ level-(d+1) join per level, deepest first —
     * the shortest-path DAG edges are exactly (u at level d, w at level
-    * d+1, u~w). Rounds ≤ 2·min(diameter, maxHops); forward level frames
-    * are localCheckpoint'ed (the emptiness probe forces one action per
-    * hop anyway), backward dep frames ride a LAZY persist chain — the
+    * d+1, u~w). Rounds ≤ 2·min(diameter, maxHops); forward levels are
+    * the rounds of [[CheckpointBlocks.iterate]] (one job per hop, which
+    * also tests the frontier for emptiness), backward dep frames ride a
+    * LAZY persist chain — the
     * backward loop takes no driver decision, so the whole dependency
     * DAG materializes inside the caller's single action (round 16).
     * Both frame families (and the adjacency cache feeding the lazy
@@ -1079,13 +1002,11 @@ object Graphs {
     * level cost ~2 driver round-trips per hop at small SF, and the
     * in-row form is strictly cheaper at every scale).
     *
-    * Forward frontier discipline (round 14): adj is symmetric, so a
-    * neighbor of a level-L node sits at distance L−1, L, or L+1 per
-    * landmark — the new-node anti-join uses the last TWO level frames,
-    * which IS the full visited filter, without maintaining (and
-    * checkpointing, and growing) a cumulative visited set. Per hop the
-    * driver now runs exactly two actions: the level checkpoint and the
-    * emptiness probe.
+    * Forward frontier discipline: adj is symmetric, so a neighbor of a
+    * level-L node sits at distance L−1, L, or L+1 per landmark — the
+    * new-node anti-join uses the last TWO level frames, which IS the
+    * full visited filter, without maintaining (and checkpointing, and
+    * growing) a cumulative visited set.
     *
     * `decimalSigma = true` is the remediation path the refusal names:
     * σ rides decimal(38,0) end to end (seed, per-level sums, the cq
@@ -1150,31 +1071,24 @@ object Graphs {
     val sigmaOne =
       if (decimalSigma) lit(1).cast("decimal(38,0)") else lit(1L)
     // forward: levels.head = deepest level so far; (lm, id, sigma)
-    var levels = List(
-      landmarks.select(col("lm"), col("lm").as("id"), sigmaOne.as("sigma"))
-        .localCheckpoint(true))
-    var exhausted = false
-    while (!exhausted && levels.size <= maxHops) {
+    val (levels, _) = CheckpointBlocks.iterate("landmarkBetweenness",
+      landmarks.select(col("lm"), col("lm").as("id"), sigmaOne.as("sigma")),
+      maxHops, CheckpointBlocks.Retain.Levels) { levels =>
       val summed = adj
         .join(levels.head.select(col("lm"), col("id").as("u"),
           col("sigma")), Seq("u"))
         .groupBy(col("lm"), col("v").as("id"))
         .agg(sum("sigma").as("sigma"))
       // BOTH σ guards are in-row raise_error branches evaluated during
-      // the level's eager checkpoint (round 14 — the r12 backward-dq
-      // pattern applied forward; the per-level min/max driver probe is
-      // gone). Decimal mode: an overflowed σ sum is NULL (inputs never
-      // are). Long mode: each materialized σ is held ≤ 2⁶²/maxDeg, so
-      // the NEXT level's ≤ maxDeg-term sum provably stays under 2⁶² —
-      // no wrap can occur before its own row is checked; σ<0 flags a
-      // wrap that the bound arithmetic says cannot happen (belt and
-      // braces, same as the old probe).
-      // no cumulative visited set (round 14): adj is SYMMETRIC, so per
-      // landmark a neighbor of a level-L node sits at distance L−1, L,
-      // or L+1 — anti-joining the last TWO level frames is exactly the
-      // full visited filter. Drops one checkpoint job per level (the
-      // visited union) and bounds the anti-join build side at two
-      // frontier widths instead of the whole reached set.
+      // the level's eager checkpoint. Decimal mode: an overflowed σ sum
+      // is NULL (inputs never are). Long mode: each materialized σ is
+      // held ≤ 2⁶²/maxDeg, so the NEXT level's ≤ maxDeg-term sum
+      // provably stays under 2⁶² — no wrap can occur before its own row
+      // is checked; σ<0 flags a wrap that the bound arithmetic says
+      // cannot happen (belt and braces).
+      // adj is SYMMETRIC, so per landmark a neighbor of a level-L node
+      // sits at distance L−1, L, or L+1 — anti-joining the last TWO
+      // level frames is exactly the full visited filter.
       val seen = levels.take(2).map(_.select("lm", "id")).reduce(_ union _)
       // guard applied AFTER the anti-join (ADVICE r14): the checked σ
       // set must be exactly the rows that survive into later levels,
@@ -1182,30 +1096,21 @@ object Graphs {
       // this projection — an already-visited node's σ sum may legally
       // exceed the bound and must not raise.
       val anti = summed.join(seen, Seq("lm", "id"), "left_anti")
-      val expanded =
-        if (decimalSigma) anti.select(col("lm"), col("id"),
-          when(col("sigma").isNotNull, col("sigma"))
-            .otherwise(raise_error(lit(decMsg + " in a sigma sum")))
+      if (decimalSigma) anti.select(col("lm"), col("id"),
+        when(col("sigma").isNotNull, col("sigma"))
+          .otherwise(raise_error(lit(decMsg + " in a sigma sum")))
+          .as("sigma"))
+      else {
+        val msg = overflowMsg("sigma=@SIGMA@ at level " +
+          s"${levels.size} (bound $sigmaSafe = 2^62/maxDeg=$maxDeg)")
+        val Array(pre, post) = msg.split("@SIGMA@", 2)
+        anti.select(col("lm"), col("id"),
+          when(col("sigma") >= 0L && col("sigma") <= sigmaSafe,
+            col("sigma"))
+            .otherwise(raise_error(concat(lit(pre),
+              col("sigma").cast("string"), lit(post))))
             .as("sigma"))
-        else {
-          val msg = overflowMsg("sigma=@SIGMA@ at level " +
-            s"${levels.size} (bound $sigmaSafe = 2^62/maxDeg=$maxDeg)")
-          val Array(pre, post) = msg.split("@SIGMA@", 2)
-          anti.select(col("lm"), col("id"),
-            when(col("sigma") >= 0L && col("sigma") <= sigmaSafe,
-              col("sigma"))
-              .otherwise(raise_error(concat(lit(pre),
-                col("sigma").cast("string"), lit(post))))
-              .as("sigma"))
-        }
-      // ONE action per hop (round 15): the materializing count doubles
-      // as the emptiness probe (CheckpointBlocks.checkpointCount) —
-      // the separate isEmpty job per level is gone
-      val (next, nNext) = CheckpointBlocks.checkpointCount(expanded)
-      if (nNext == 0L) {
-        CheckpointBlocks.release(next)
-        exhausted = true
-      } else levels = next :: levels
+      }
     }
     // backward: deepest level seeds dq = 0; each shallower level's dq
     // sums the integer-exact contributions from its DAG successors.
@@ -1347,11 +1252,11 @@ object Graphs {
     * coarsening that both engines replay identically (the prefix of a
     * sorted multiset is order-independent even under rank ties).
     *
-    * Eager per-round checkpoints kept on purpose (round 16, measured):
-    * the labelPropagation-style lazy persist chain cut the job census
-    * 20 → 17 but measured FLAT at matched probes (3.13 vs 3.20 s at
-    * sf0.1) — each round's per-node window sort + collect_list is the
-    * cost here, not the action count. Reverted to the proven shape. */
+    * The rounds run in [[CheckpointBlocks.iterate]], eagerly
+    * checkpointed on purpose: the labelPropagation-style lazy persist
+    * chain cut the job census 20 → 17 but measured FLAT at matched
+    * probes (3.13 vs 3.20 s at sf0.1) — each round's per-node window
+    * sort + collect_list is the cost here, not the action count. */
   def wlFingerprint(edges: DataFrame, srcCol: String, dstCol: String,
                     rounds: Int = 2, maxNbr: Int = 4096): DataFrame = {
     require(rounds >= 1 && rounds <= 4,
@@ -1363,10 +1268,11 @@ object Graphs {
       .filter(col("u") =!= col("v"))
       // one shuffle (see the adjacency note in landmarkBetweenness)
       .repartition(col("v")).dropDuplicates().persist()
-    var labels = sym.groupBy("u").agg(count(lit(1)).as("deg"))
-      .select(col("u").as("node"), md5(col("deg").cast("string")).as("lab"))
-      .localCheckpoint(true)
-    (1 to rounds).foreach { _ =>
+    val (kept, _) = CheckpointBlocks.iterate("wlFingerprint",
+      sym.groupBy("u").agg(count(lit(1)).as("deg"))
+        .select(col("u").as("node"), md5(col("deg").cast("string")).as("lab")),
+      rounds, CheckpointBlocks.Retain.Last) { live =>
+      val labels = live.head
       // rank neighbors per node BEFORE collecting: the window sort is
       // spillable and the collected array is ≤ maxNbr, so the hot node
       // never holds its full degree in one row (ties share a label
@@ -1379,18 +1285,15 @@ object Graphs {
         .agg(array_join(sort_array(
             collect_list(when(col("rn") <= maxNbr, col("nl")))), ",").as("nh"),
           count(lit(1)).as("nd"))
-      val next = labels
+      labels
         .join(nbr.select(col("u").as("node"), col("nh"), col("nd")), Seq("node"))
         .select(col("node"),
           md5(concat(col("lab"), lit("|"), col("nh"),
             lit("#"), col("nd").cast("string"))).as("lab"))
-        .localCheckpoint(true)
-      CheckpointBlocks.release(labels)
-      labels = next
     }
-    val out = labels.groupBy("lab").agg(count(lit(1)).as("n"))
+    val out = kept.head.groupBy("lab").agg(count(lit(1)).as("n"))
       .localCheckpoint(true)
-    CheckpointBlocks.release(labels)
+    CheckpointBlocks.release(kept.head)
     sym.unpersist()
     out
   }
@@ -1586,38 +1489,32 @@ object Graphs {
     * Scale shape: per round, support is one equi-join pair over the
     * undirected adjacency (neighbors-of-a ⋈ neighbors-of-b on the
     * common endpoint) + one hash aggregate — never an all-pairs
-    * product; per-round localCheckpoint truncates the iterative plan
-    * exactly like [[connectedComponents]]. The per-round count is a
-    * bounded driver action (`rounds` is a small code constant). */
+    * product. The rounds run in [[CheckpointBlocks.iterate]], whose
+    * per-round count is the census (`rounds` is a small code
+    * constant). */
   def kTrussRounds(edges: DataFrame, srcCol: String, dstCol: String,
                    k: Int, rounds: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    var e = edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("a"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
-      .filter(col("a") =!= col("b")).distinct().localCheckpoint(true)
-    val counts = Seq.newBuilder[(Long, Long)]
-    (1 to rounds).foreach { r =>
+    val (kept, counts) = CheckpointBlocks.iterate("kTrussRounds",
+      edges.select(least(col(srcCol), col(dstCol)).cast("long").as("a"),
+          greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
+        .filter(col("a") =!= col("b")).distinct(),
+      rounds, CheckpointBlocks.Retain.Last) { live =>
+      val e = live.head
       val adj = e.select(col("a").as("u"), col("b").as("w"))
         .union(e.select(col("b").as("u"), col("a").as("w")))
       val nbrA = adj.select(col("u").as("a"), col("w").as("c"))
       val nbrB = adj.select(col("u").as("b"), col("w").as("c"))
       val sup = e.join(nbrA, Seq("a")).join(nbrB, Seq("b", "c"))
         .groupBy("a", "b").agg(count(lit(1)).as("sup"))
-      // one action per round (round 15, checkpointCount): the census
-      // count rides the materializing job instead of a second scan
-      val (next, nNext) = CheckpointBlocks.checkpointCount(
-        e.join(sup, Seq("a", "b"), "left")
-          .filter(coalesce(col("sup"), lit(0L)) >= lit((k - 2).toLong))
-          .select("a", "b"))
-      CheckpointBlocks.release(e)
-      e = next
-      counts += ((r.toLong, nNext))
+      e.join(sup, Seq("a", "b"), "left")
+        .filter(coalesce(col("sup"), lit(0L)) >= lit((k - 2).toLong))
+        .select("a", "b")
     }
-    val out = counts.result().toDF("peel_round", "n_edges")
-    CheckpointBlocks.release(e)
-    out
+    CheckpointBlocks.release(kept.head)
+    counts.tail.zipWithIndex.map { case (n, r) => (r + 1L, n) }
+      .toDF("peel_round", "n_edges")
   }
 
   /** Element-wise max of packed register arrays ([[graft.plans

@@ -43,23 +43,25 @@ object ColumnBridge {
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
   /** Eager LOCAL checkpoint that also returns the materialized row
-    * count (round 15). `Dataset.localCheckpoint(eager = true)` already
-    * runs a count() internally to materialize the blocks but discards
-    * the number, so iterative operators paid a SECOND driver job
+    * count. `Dataset.localCheckpoint(eager = true)` already runs a
+    * count() internally to materialize the blocks but discards the
+    * number, so an iterative operator would pay a SECOND driver job
     * (`isEmpty`) per round just to learn whether the frontier drained.
     * This mirrors the classic checkpoint implementation — execute,
     * copy, localCheckpoint, count, rebuild as a LogicalRDD leaf via
     * `LogicalRDD.fromDataset` (private[sql], hence this bridge) — and
-    * hands the count back: one action per round instead of two.
+    * hands the count back: one action per round instead of two. Its
+    * one caller is `graft.plans.CheckpointBlocks.checkpointCount`.
     *
-    * Observability note (ADVICE r15, intentional): unlike
-    * `Dataset.localCheckpoint`, the materializing count here runs
-    * OUTSIDE `SQLExecution.withNewExecutionId`, so it carries no SQL
-    * execution id — QueryExecutionListeners and the UI's SQL tab see
-    * the iterative rounds' checkpoint jobs as plain RDD jobs. That is
-    * acceptable for this engine's bounded iterative loops (the bench
-    * attributes cost per QUERY via job census, not per SQL execution)
-    * and avoids coupling the bridge to the execution-id lifecycle. */
+    * Observability note (intentional): unlike `Dataset.localCheckpoint`,
+    * the materializing count here runs OUTSIDE
+    * `SQLExecution.withNewExecutionId`, so it carries no SQL execution
+    * id — QueryExecutionListeners and the UI's SQL tab see the rounds'
+    * checkpoint jobs as plain RDD jobs. `CheckpointBlocks.iterate` names
+    * each of them by its job description, `<op> round k`, which is what
+    * the job census and the UI's jobs tab show. The bench attributes
+    * cost per QUERY via that census, not per SQL execution, and the
+    * bridge stays free of the execution-id lifecycle. */
   def localCheckpointWithCount(df: DataFrame): (DataFrame, Long) = {
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
     val internalRdd = ds.queryExecution.toRdd.map(_.copy())

@@ -64,14 +64,14 @@ class ContractSpec extends SparkSpec {
       s"sessions built outside graft.Session: $builders")
   }
 
-  /** `file:line` of every line under src/main/scala, `home` excepted,
+  /** `file:line` of every line under src/main/scala, `homes` excepted,
     * that contains one of `needles`. */
-  private def sitesOutside(home: String, needles: Seq[String]): Seq[String] = {
+  private def sitesOutside(homes: Seq[String], needles: Seq[String]): Seq[String] = {
     import scala.jdk.CollectionConverters._
-    val homePath = java.nio.file.Paths.get(home)
+    val homePaths = homes.map(java.nio.file.Paths.get(_)).toSet
     java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
       .iterator.asScala.filter(_.toString.endsWith(".scala"))
-      .filter(_ != homePath).toSeq.sorted
+      .filterNot(homePaths).toSeq.sorted
       .flatMap { p =>
         java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
           case (line, i) if needles.exists(line.contains) => s"$p:${i + 1}"
@@ -83,7 +83,7 @@ class ContractSpec extends SparkSpec {
     // memory sinks, sink-view drops and the state-store provider belong
     // to StreamOps.drain / withStreamConf, so every replay's conf scope
     // and finally-stop are written once
-    val sites = sitesOutside("src/main/scala/graft/streaming/StreamOps.scala",
+    val sites = sitesOutside(Seq("src/main/scala/graft/streaming/StreamOps.scala"),
       Seq("format(\"memory\")", "dropTempView", "RocksDBStateStoreProvider"))
     assert(sites.isEmpty, s"bounded-replay harness outside StreamOps: $sites")
   }
@@ -92,9 +92,19 @@ class ContractSpec extends SparkSpec {
     // Io.guarded submits a medallion layer's writes together from a pool
     // made per call; a second pool elsewhere would hold threads whose
     // SparkContext local properties go stale between calls
-    val sites = sitesOutside("src/main/scala/graft/sources/Io.scala",
+    val sites = sitesOutside(Seq("src/main/scala/graft/sources/Io.scala"),
       Seq("Executors.", "ExecutionContext", "Future"))
     assert(sites.isEmpty, s"driver-side thread pools outside Io: $sites")
+  }
+
+  test("the per-round checkpoint job lives only in CheckpointBlocks.iterate") {
+    // iterate owns the count-to-materialize job of every iterative
+    // operator's round, with its release, stop test and job description;
+    // a hand-rolled round loop elsewhere would repeat all of them
+    val sites = sitesOutside(Seq("src/main/scala/graft/plans/CheckpointBlocks.scala",
+      "src/main/scala/org/apache/spark/sql/graftbridge/ColumnBridge.scala"),
+      Seq("checkpointCount", "localCheckpointWithCount"))
+    assert(sites.isEmpty, s"round checkpoints outside CheckpointBlocks: $sites")
   }
 
   test("every scaladoc sits on a definition, not on another doc comment") {

@@ -40,6 +40,13 @@ class GraphsSpec extends SparkSpec {
       Graphs.connectedComponents(edges, "src", "dst", maxIter = 1,
         localFinishEdges = 0L).collect()
     }
+    // kCore refuses an unconverged peel the same way: the 2-core of a
+    // 6-edge chain peels one edge off each end per round, down to empty
+    val chain = (1L to 6L).map(i => i -> (i + 1)).toDF("src", "dst")
+    intercept[IllegalStateException] {
+      Graphs.kCore(chain, "src", "dst", k = 2, maxIter = 1,
+        localFinishEdges = 0L).collect()
+    }
   }
 
   test("dedupClusters: rep is the min doc, sizes count members") {

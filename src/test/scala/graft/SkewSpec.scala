@@ -143,6 +143,63 @@ class SkewSpec extends SparkSpec {
     graft.plans.CheckpointBlocks.release(out)
   }
 
+  test("iterate runs one job per round, named <op> round k, and restores the caller's description") {
+    import graft.plans.CheckpointBlocks
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        descs.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("?"))
+        ()
+      }
+    }
+    // listener events arrive asynchronously: wait for the queue to settle
+    def settled(): List[String] = {
+      var (prev, spins) = (-1, 0)
+      while (prev != descs.size && spins < 40) {
+        prev = descs.size; Thread.sleep(100); spins += 1
+      }
+      import scala.jdk.CollectionConverters._
+      val out = descs.asScala.toList
+      descs.clear()
+      out
+    }
+    val sc = spark.sparkContext
+    // each round drops one row: 4, 3, 2, 1 rows
+    def shrink(live: List[org.apache.spark.sql.DataFrame]) =
+      live.head.filter($"id" > 0).select(($"id" - 1).as("id"))
+    sc.addSparkListener(listener)
+    sc.setJobDescription("caller")
+    try {
+      val (kept, counts) = CheckpointBlocks.iterate("probe",
+        spark.range(4).toDF(), 3, CheckpointBlocks.Retain.Last)(shrink)
+      assert(counts == Vector(4L, 3L, 2L, 1L))
+      assert(kept.map(_.count()) == List(1L))
+      kept.foreach(CheckpointBlocks.release(_))
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      assert(settled().filter(_ != "caller") ==
+        (0 to 3).map(k => s"probe round $k").toList)
+
+      var steps = 0
+      val boom = intercept[RuntimeException] {
+        CheckpointBlocks.iterate("probe", spark.range(4).toDF(), 3,
+          CheckpointBlocks.Retain.Last) { live =>
+          steps += 1
+          if (steps == 2) throw new RuntimeException("step failed")
+          shrink(live)
+        }
+      }
+      assert(boom.getMessage == "step failed")
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      assert(settled() == List("probe round 0", "probe round 1"))
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("sizedParallelism prices a frame by the advisory partition size") {
     val dir = graft.streaming.StreamOps.tempStreamDir("sized").toString
     spark.range(0L, 20000L, 1L, 1).write.mode("overwrite").parquet(dir)

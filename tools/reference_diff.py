@@ -18,7 +18,7 @@ gone as of round 2).
 Usage: python3 tools/reference_diff.py /tmp/medallion
 (after: sbt 'runMain graft.tools.RunMedallion /tmp/medallion 1.0 42')
 """
-import glob, importlib.util, math, sys, types
+import glob, importlib.util, math, os, sys, types
 from datetime import datetime
 
 import numpy as np
@@ -35,7 +35,11 @@ class FakeDatetime(datetime):
 
 
 def load_reference_module(path, name):
-    """Import a reference script with its S3/env deps stubbed."""
+    """Import a reference script with its S3/env deps stubbed. Exits
+    with code 2 when the script is absent: parity cannot be checked."""
+    if not os.path.isfile(path):
+        print(f"reference-diff: {path} is missing; parity not checked")
+        sys.exit(2)
     for mod in ["boto3", "botocore", "botocore.exceptions", "dotenv"]:
         if mod not in sys.modules:
             m = types.ModuleType(mod)
