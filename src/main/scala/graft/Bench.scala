@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.{Dataset, SparkSession}
+
+import graft.plans.CheckpointBlocks
+
 /** Benchmark main (driver contract, BASELINE.md): runs every SparkEntry
   * query against SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -13,6 +17,7 @@ package graft
   * map at full precision is written to BENCH_FULL.json in the cwd
   * (the repo root under the driver), referenced from the line via
   * "full". Judges and humans read the file; the driver parses the line.
+  * Every number is as measured: nothing is normalised or re-run.
   *
   * Each query is forced through the `noop` sink, not `.count()` — count()
   * lets Catalyst prune every computed column (an expression-heavy query
@@ -35,251 +40,122 @@ package graft
   */
 object Bench {
   def main(args: Array[String]): Unit = {
+    // optional args = subset of query names (focused measurement)
+    SparkEntry.requireKnown("bench", args.toSeq)
+    val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Session.cpus(default = 32)
     val spark = Session.local("graft-bench", cpus)
 
-    def runNoop(name: String): Either[String, Double] = {
-      val t0 = System.nanoTime()
-      try {
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        Right((System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable =>
+    def run(name: String): Either[String, Double] =
+      try Right(timedNoop(spark)(SparkEntry.queries(name)(spark, sfDir)))
+      catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        Left(s"${e.getClass.getSimpleName}")
-      } finally {
-        // reset storage between measurements — leaked checkpoint/persist
-        // blocks from one run must not tax the next (see scaladoc)
-        graft.plans.CheckpointBlocks.releaseAll(spark)
+        Left(e.getClass.getSimpleName)
       }
-    }
 
     // load-noise sentinel (round-9, VERDICT r08 item 3): a fixed-cost
     // pure-codegen scan — 2×10⁸-row range, modular sum, no shuffle, no
-    // I/O — timed FIRST and LAST. Its idle cost is a machine constant
-    // (~0.5 s at local[32]), so a loaded driver box shows up as an
-    // inflated sentinel and judges can normalize that round's numbers
-    // instead of re-adjudicating every outlier (r08 driver bench ran
-    // 2–7× hot on x_bpe_merges/x_embed_neardup; the sentinel would have
-    // said so in one number).
-    def sentinel(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 200000000L, 1L, cpus)
-        .selectExpr("sum(id % 12345) AS s")
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    // I/O — timed FIRST and LAST. Its idle cost is a machine constant,
+    // so a loaded driver box shows up as an inflated sentinel next to
+    // the total it was measured with.
+    def sentinel(): Double = timedNoop(spark)(
+      spark.range(0L, 200000000L, 1L, cpus).selectExpr("sum(id % 12345) AS s"))
     sentinel()                             // warm-up: codegen compile
     val sentinelPre = math.min(sentinel(), sentinel())
+    val jobsPre = jobLatencyMs(spark)
 
-    // scheduler-latency sentinel (round-15, VERDICT r14 item 1): the
-    // CPU-throughput sentinel above provably cannot see per-JOB
-    // scheduler latency drift — the r14 driver run carried a healthy
-    // 0.167 CPU sentinel while many-job queries (x_recursive_cte,
-    // x_ransac, x_random_walks, x_ppr) ran a uniform ~2.1× over the
-    // same-code committed baseline, +23.5 s of pure per-job latency.
-    // Probe that axis directly: K trivial single-task jobs
-    // (range(1) → noop), report the MEDIAN wall ms per job. Idle cost
-    // on this box is ~15-25 ms/job; a latency epoch like r14's reads
-    // ~2× that, so a driver-vs-committed gap is attributed by this
-    // field instead of re-adjudicating every outlier. Median (not
-    // min) because latency drift is a sustained shift, not a spike —
-    // and the first compile-bearing iteration never lands on the
-    // median with K ≥ 5. Reported as a top-level two-element array
-    // [pre, post], NOT a queries entry (census consumers must not
-    // special-case it; same rule as sentinel_pre/post).
-    def jobSentinel(): Double = {
-      val k = 15
-      val ts = Array.tabulate(k) { _ =>
-        val t0 = System.nanoTime()
-        spark.range(0L, 1L, 1L, 1)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e6
-      }
-      java.util.Arrays.sort(ts)
-      ts(k / 2)
-    }
-    val jobsPre = jobSentinel()
-
-    // per-query baseline from the COMMITTED BENCH_FULL.json, read BEFORE
-    // this run overwrites it — fuels the outlier re-measure below. The
-    // numeric-value regex skips string fields ("metric","sf",...), and
-    // non-query keys it does catch ("value","n_failed") are never query
-    // names so the lookups below can't hit them.
-    // COUPLING NOTE (ADVICE r10): this regex is matched to the writer
-    // format at line ~202 ("name":number, no spaces). It degrades SOFT
-    // on format drift — an empty baseline silently disables the outlier
-    // re-measure (never corrupts a measurement) — which is the accepted
-    // trade for a zero-dependency parser; if the writer ever changes,
-    // change this regex in the same commit.
-    val baseline: Map[String, Double] = {
-      val p = java.nio.file.Paths.get("BENCH_FULL.json")
-      if (java.nio.file.Files.exists(p)) {
-        val txt = java.nio.file.Files.readString(p)
-        """"([A-Za-z0-9_]+)":([0-9][0-9.eE+-]*)""".r.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } else Map.empty
-    }
-
-    // optional args = subset of query names (focused measurement)
-    val names = if (args.nonEmpty) args.toSeq.filter(SparkEntry.queries.contains)
-      else SparkEntry.queries.keys.toSeq.sorted
-
-    val results0 = names.map { n =>
-      // measurement-isolation GC (round 15, declared methodology fix in
-      // OPTIMIZATION_r15.md): a profiled A/B showed old-gen garbage from
-      // PRIOR queries inflating a later query's timed runs ~40%
-      // (x_betweenness 12.0 s after nine queries vs 8.7 s after a forced
-      // full GC, at matched scheduler-latency probes) — cross-query
-      // contamination of per-query attribution, the same class of noise
-      // releaseAll() already removes on the storage axis. One collection
-      // per query, OUTSIDE the timed region (JMH-style iteration
-      // hygiene); old numbers stay comparable via the committed
-      // BENCH_FULL history and the r14-close baseline noted there.
+    val results = names.map { n =>
+      // measurement-isolation GC (round 15, OPTIMIZATION_r15.md): old-gen
+      // garbage from PRIOR queries inflated a later query's timed runs
+      // ~40% (x_betweenness 12.0 s after nine queries vs 8.7 s after a
+      // forced full GC, at matched scheduler-latency probes). One
+      // collection per query, OUTSIDE the timed region (JMH-style
+      // iteration hygiene).
       System.gc()
-      runNoop(n) match {                 // warm-up: codegen, footer caches
+      run(n) match {                     // warm-up: codegen, footer caches
         case Right(_) =>                 // min of two timed runs
-          n -> (for (a <- runNoop(n); b <- runNoop(n)) yield math.min(a, b))
+          n -> (for (a <- run(n); b <- run(n)) yield math.min(a, b))
         case left     => n -> left       // failed warm-up: don't re-run
       }
     }
-
-    // outlier re-measure (VERDICT r09 item 2): driver boxes show phantom
-    // per-query spikes (x_assoc_rules 8.15 s vs 2.14 s idle for IDENTICAL
-    // code) that the load sentinels can't catch — the spike is transient
-    // scheduler jitter on one query, not sustained load. Any query
-    // measuring > 2× its committed-baseline time AND > 0.5 s absolute
-    // over it (so sub-second queries don't churn) gets ONE extra timed
-    // run, reporting the min. Bounded extra cost — only outliers re-run —
-    // and a REAL regression still shows: genuinely-2×-slower code
-    // re-measures at ~2× again.
-    val remeasured = scala.collection.mutable.ListBuffer.empty[String]
-    val results = results0.map {
-      case (k, Right(v))
-        if baseline.get(k).exists(b => v > 2 * b && v - b > 0.5) =>
-        remeasured += k
-        k -> Right(runNoop(k).fold(_ => v, r => math.min(v, r)))
-      case other => other
-    }
     val sentinelPost = math.min(sentinel(), sentinel())
-    val jobsPost = jobSentinel()
+    val jobsPost = jobLatencyMs(spark)
 
-    val failed = results.collect { case (k, Left(err)) => s"\"$k: $err\"" }
-      .mkString("[", ",", "]")
-    val nFailed = results.count(_._2.isLeft)
-    val total = results.map(_._2.getOrElse(0.0)).sum
-
-    // load-normalized total (round-13, VERDICT r12 item 6): the box's
-    // idle cost swings ~30% across hours (341.9 vs 441.9 s on identical
-    // code), so round-over-round comparison of the raw total is
-    // archaeology without the sentinel. value_norm deflates the total
-    // by the observed sentinel inflation relative to the machine's
-    // committed healthy idle cost (SentinelRef, the r12 healthy-run
-    // value): value_norm = value · SentinelRef / max(SentinelRef, s̄)
-    // with s̄ = (sentinel_pre + sentinel_post)/2. CONSERVATIVE by
-    // construction — a loaded box deflates toward its idle-equivalent
-    // cost, a healthy-or-better box reports the RAW total (never
-    // inflated upward by a lucky sub-reference sentinel). Formula
-    // documented in SCALE.md §bench-noise.
-    val sentinelMean = (sentinelPre + sentinelPost) / 2.0
-    // SentinelRef ≤ 0 means "no baseline for this machine" (env set to
-    // 0/off) — report the raw total rather than normalize against a
-    // wrong reference (ADVICE r13)
-    val valueNorm =
-      if (SentinelRef <= 0.0) total
-      else total * (SentinelRef / math.max(SentinelRef, sentinelMean))
-
-    // complete per-query map, full precision → file (see size contract).
-    // The load sentinels are TOP-LEVEL fields, not entries in "queries"
-    // (ADVICE r09: consumers that treat every queries key as a graded
-    // query name — census cross-checks, per-query diffs, sum-validation
-    // of "value" — must not need to special-case them).
-    val fullQs = results.collect { case (k, Right(v)) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val remeas = remeasured.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val fullLine =
-      s"""{"metric":"total","value":$total,"value_norm":$valueNorm,"sentinel_ref":$SentinelRef,"unit":"sec","sentinel_pre":$sentinelPre,"sentinel_post":$sentinelPost,"sentinel_jobs_ms":[$jobsPre,$jobsPost],"remeasured":$remeas,"queries":$fullQs,"n_failed":$nFailed,"failed":$failed,"sf":"$sfDir"}"""
+    def render(full: Boolean) = line(results, (sentinelPre, sentinelPost),
+      (jobsPre, jobsPost), sfDir, full)
     // subset runs (explicit query args — focused measurement) must NOT
-    // overwrite the committed full-run map: it is the outlier-re-measure
-    // baseline for the next full run (round 15 — a probe run of one
-    // query was silently wiping all 425 baselines)
+    // overwrite the committed full-run map (round 15 — a probe run of
+    // one query was silently wiping all 425 entries)
     if (args.isEmpty)
-      java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_FULL.json"), fullLine + "\n")
-
-    // headline subset, 2-decimal → the ONE parseable stdout line.
-    // Locale.ROOT-pinned: the f-interpolator formats through the JVM
-    // default locale, and a comma decimal separator ("146,30") would
-    // break the driver's single-parseable-JSON-line contract.
-    def f2(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    val headQs = results.collect {
-        case (k, Right(v)) if Headline(k) => s""""$k":${f2(v)}"""
-      }.mkString("{", ",", "}")
-    // remeasured NAMES in the headline (VERDICT r10 item 7): a loaded
-    // driver run self-explains without opening BENCH_FULL.json. The
-    // list is LENGTH-capped (60 chars of content — ~3-4 typical names)
-    // so a pathologically loaded box can't blow the 1900-char line
-    // budget; n_remeasured carries the true count either way and
-    // BENCH_FULL.json always has the complete list.
-    val remeasHead = {
-      var budget = 60
-      remeasured.takeWhile { n =>
-        val c = n.length + 3; val ok = budget >= c; if (ok) budget -= c; ok
-      }.map("\"" + _ + "\"").mkString("[", ",", "]")
-    }
-    def f1(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
-    println(s"""{"metric":"total","value":${f2(total)},"value_norm":${f2(valueNorm)},"unit":"sec","sentinel_pre":${f2(sentinelPre)},"sentinel_post":${f2(sentinelPost)},"sentinel_jobs_ms":[${f1(jobsPre)},${f1(jobsPost)}],"n_remeasured":${remeasured.size},"remeasured":$remeasHead,"queries":$headQs,"n_failed":$nFailed,"failed":$failed,"full":"BENCH_FULL.json","sf":"$sfDir"}""")
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get("BENCH_FULL.json"), render(full = true) + "\n")
+    println(render(full = false))
     spark.stop()
   }
 
-  /** The machine's healthy idle sentinel cost (seconds). Default is the
-    * r13 committed healthy-run value (sentinel mean 0.155–0.179 across
-    * the close runs; 0.17 is the midpoint the r12 baseline landed on).
-    * value_norm keys off this; on DIFFERENT hardware override it with
-    * `SPARK_GRAFT_SENTINEL_REF=<measured idle sentinel>` (ADVICE r13 —
-    * a baked-in constant silently normalizes against the wrong
-    * baseline elsewhere), or set it to 0/`off` to suppress the
-    * normalization entirely (value_norm then reports the raw total:
-    * max(0, s̄) ≥ 0 makes the ratio 0/x only when ref is 0, so we
-    * special-case it below). Re-baseline the default ONLY with a
-    * measured idle run, in the same commit as the SCALE.md
-    * §bench-noise note. */
-  val SentinelRef: Double =
-    sys.env.get("SPARK_GRAFT_SENTINEL_REF").map(_.trim)
-      .filterNot(v => v.isEmpty || v.toLowerCase == "off")
-      .map { v =>
-        try v.toDouble
-        catch { case _: NumberFormatException => throw new IllegalArgumentException(
-          s"SPARK_GRAFT_SENTINEL_REF must be a number (seconds) or 'off', got '$v'") }
-      }.getOrElse(0.17)
+  /** Wall seconds of `df` — built inside the timed region — run through
+    * the noop sink; the session's checkpoint and persist blocks are
+    * released afterwards, outside it, whether or not the run threw. */
+  private[graft] def timedNoop(spark: SparkSession)(df: => Dataset[_]): Double =
+    try {
+      val t0 = System.nanoTime()
+      df.write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    } finally CheckpointBlocks.releaseAll(spark)
+
+  /** Scheduler-latency probe (round-15, VERDICT r14 item 1): the median
+    * wall ms of 15 trivial single-task jobs (range(1) → noop). The
+    * CPU-throughput sentinel cannot see per-JOB latency drift — the r14
+    * driver run carried a healthy CPU sentinel while many-job queries
+    * ran a uniform ~2.1× slow. Idle cost is ~15-25 ms/job. Median, not
+    * min, because latency drift is a sustained shift, not a spike, and
+    * the first compile-bearing job never lands on the median. */
+  private[graft] def jobLatencyMs(spark: SparkSession): Double = {
+    val ts = Array.fill(15)(timedNoop(spark)(spark.range(0L, 1L, 1L, 1)) * 1e3)
+    ts.sorted.apply(ts.length / 2)
+  }
+
+  /** The JSON line of one run: `results` maps each query to its seconds
+    * or its exception's class name. The file form (`full`) carries every
+    * query at full precision; the stdout form only the [[Headline]]
+    * queries at 2 decimals and a pointer to the file. The sentinels are
+    * TOP-LEVEL fields, not "queries" entries (ADVICE r09: consumers that
+    * treat every queries key as a graded query must not special-case
+    * them). Locale.ROOT-pinned: the JVM default locale may use a comma
+    * decimal separator, which would break the single-JSON-line parse. */
+  private[graft] def line(results: Seq[(String, Either[String, Double])],
+      sentinels: (Double, Double), jobsMs: (Double, Double), sfDir: String,
+      full: Boolean): String = {
+    def num(v: Double, digits: Int): String =
+      if (full) v.toString
+      else String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+    val qs = results.collect {
+      case (k, Right(v)) if full || Headline(k) => s""""$k":${num(v, 2)}"""
+    }
+    val failed = results.collect { case (k, Left(err)) => s""""$k: $err"""" }
+    val total = results.map(_._2.getOrElse(0.0)).sum
+    val file = if (full) "" else """"full":"BENCH_FULL.json","""
+    s"""{"metric":"total","value":${num(total, 2)},"unit":"sec",""" +
+      s""""sentinel_pre":${num(sentinels._1, 2)},"sentinel_post":${num(sentinels._2, 2)},""" +
+      s""""sentinel_jobs_ms":[${num(jobsMs._1, 1)},${num(jobsMs._2, 1)}],""" +
+      s""""queries":{${qs.mkString(",")}},"n_failed":${failed.size},""" +
+      s""""failed":[${failed.mkString(",")}],$file"sf":"$sfDir"}"""
+  }
 
   /** The stable cross-round comparison set: flagship parity queries plus
     * the most expensive / most representative operator per family. Keep
-    * membership stable — round-over-round deltas key off these names. */
+    * membership stable — round-over-round deltas key off these names;
+    * every member dropped over the rounds still has its full-precision
+    * time in BENCH_FULL.json. ContractSpec budgets the worst-case line
+    * at ≤ 1900 chars: drop a member before adding one. */
   val Headline: Set[String] = Set(
     "q_fact_summary", "j2_fk_join",
     "x_dedup_exact", "x_dedup_ngram_jaccard",
-    // round-15: "sentinel_jobs_ms":[pre,post] (scheduler-latency
-    // sentinel, VERDICT r14 item 1) joined the printed line; paid for
-    // by DROPPING the twin x_dedup_simhash (the dedup family keeps 11
-    // members incl. minhash/ngram_jaccard/winnow; full-precision time
-    // remains in BENCH_FULL.json)
     "x_dedup_minhash", "x_winnow_fingerprint",
     "x_dedup_clusters", "x_corpus_clean",
     "x_decontaminate", "x_containment", "x_ppjoin", "x_fuzzy_join",
     "x_incremental_dedup",
-    // round-11: "remeasured" names joined the printed line (VERDICT r10
-    // item 7); paid for by DROPPING the twins x_dedup_clusters_logstar
-    // (of x_dedup_clusters), x_sorted_neighborhood (the dedup family
-    // keeps 12 members), and x_ann_lsh (of x_ann_ivf — the other LSH
-    // path stays visible via x_embed_neardup_lsh). Full-precision times
-    // remain in BENCH_FULL.json.
-    // x_embed_neardup dropped round-9 (twin of x_embed_neardup_lsh —
-    // the scale path stays visible; full-precision time remains in
-    // BENCH_FULL.json) to pay for x_stream_dedup under the 1900-char
-    // line budget
     "x_embed_neardup_lsh",
     "x_cos_topk_custom", "x_ann_ivf", "x_rrf_hybrid",
     "x_lang_id", "x_quality", "x_text_stats", "x_repetition",
@@ -289,43 +165,17 @@ object Bench {
     "x_gap_fill", "x_scd2", "x_incremental_agg", "x_snapshot_diff",
     "x_kcore", "x_shortest_path", "x_salted_join", "x_linreg", "x_auc",
     "x_line_dedup", "x_html_strip", "x_entity_resolution", "x_kmv_setops",
-    // round-6 family representatives (ADDED names only — existing
-    // membership stays stable for round-over-round deltas)
+    // round-6 family representatives
     "x_communities", "x_grid_join", "x_target_encode", "x_class_balance",
-    // round-6 wave-11 representatives (ADDED names only)
     "x_image_phash", "x_dbscan", "x_cdc_dedup", "x_changepoint",
     "x_pca_project", "x_bpe_encode",
-    // round-6 session-3 representatives (ADDED names only)
     "x_wasserstein", "x_fellegi_sunter", "x_bradley_terry",
     "x_kendall_tau", "x_hll_portable", "x_ngram_novelty",
-    // round-7 family representatives (ADDED names only; capped at
-    // three — the printed line must stay inside the driver's 2000-char
-    // stdout tail window with sbt's trailing success line)
+    // round-7 family representatives
     "x_cliffs_delta", "x_span_corruption", "x_cluster_balance",
-    // round-8: the five remaining rank-spine/decimal-fix queries from
-    // the r07 verdict (regressions in that family must be visible);
-    // paid for by DROPPING nine near-duplicate/trivial members
-    // (j1_left_join, a1_agg_count_sum, a3_agg_sum_count_max,
-    // e11_round_positive, f5_drop_nonpositive, g1_det_sample,
-    // sql_fact_summary [q_fact_summary twin], x_rollup_stats
-    // [x_cube_stats twin], x_window_funcs — full-precision times all
-    // remain in BENCH_FULL.json) because the r07 line ran 1914 chars
-    // with only ~11 to spare in the tail window; ContractSpec now
-    // budgets the worst-case line at ≤ 1900
-    // round-13: "value_norm" (load-normalized total, VERDICT r12
-    // item 6) joined the printed line; paid for by DROPPING
-    // x_ansari_bradley (rank-spine family stays visible via
-    // x_jonckheere/x_kendall_tau/x_cliffs_delta; full-precision time
-    // remains in BENCH_FULL.json)
+    // round-8: the rank-spine/decimal-fix queries of the r07 verdict
     "x_hits", "x_ltv_curve", "x_jonckheere",
     "x_page_hinkley",
-    // round-9: one representative for the newly GRADED streaming family
-    // (the other six x_stream_* full-precision times live in
-    // BENCH_FULL.json; one name keeps the family visible round-over-
-    // round without re-blowing the 1900-char line budget)
+    // round-9: one representative of the streaming family
     "x_stream_dedup")
-    // round-9: "_sentinel_pre"/"_sentinel_post" (load-noise calibration,
-    // VERDICT r08 item 3) joined the printed line; paid for by DROPPING
-    // the twins x_dedup_norm (of x_dedup_exact) and x_cos_topk (of
-    // x_cos_topk_custom) — full-precision times remain in BENCH_FULL.json
 }

@@ -31,4 +31,15 @@ object SparkEntry {
     sets.flatMap(_.queries).toMap
 
   val oracleSql: Map[String, String] = sets.flatMap(_.oracle).toMap
+
+  /** The names in `names` that are not graded queries, in order. */
+  def unknown(names: Seq[String]): Seq[String] = names.filterNot(queries.contains)
+
+  /** Exits 2, naming each unknown query on stderr, if `names` has any:
+    * a mistyped name must not shrink a run to the names that remain. */
+  def requireKnown(tool: String, names: Seq[String]): Unit = {
+    val bad = unknown(names)
+    bad.foreach(n => System.err.println(s"[$tool] unknown query: $n"))
+    if (bad.nonEmpty) sys.exit(2)
+  }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 
 import scala.jdk.CollectionConverters._
 
-import graft.{Session, SparkEntry}
+import graft.{Bench, Session, SparkEntry}
 import graft.plans.CheckpointBlocks
 
 /** The project's one profiler: runs named graded queries in the
@@ -31,12 +31,14 @@ import graft.plans.CheckpointBlocks
   *  - `GC`: full GC between queries, to tell heap or code-cache
   *    pressure from genuine cost.
   *
-  * Output per query: a `jobs_ms` line (median wall ms of a trivial
-  * one-task job, the Bench `sentinel_jobs_ms` twin, so each number can
-  * be tied to a latency epoch), then per run
+  * Unknown query names are listed on stderr and exit 2 before any run.
+  *
+  * Output per query: a `jobs_ms` line (Bench's `sentinel_jobs_ms`
+  * probe, the median wall ms of a trivial one-task job, so each number
+  * can be tied to a latency epoch), then per run
   *  - one `[job]` line per Spark job: id, wall ms, per-stage task
-  *    counts (skipped stages included; shows where AQE coalescing did
-  *    or did not fire) and the job description;
+  *    counts in stage-id order (skipped stages included; shows where
+  *    AQE coalescing did or did not fire) and the job description;
   *  - one `[batch]` line per streaming micro-batch, for streaming
   *    queries only: batch id, input rows, the trigger / planning /
   *    getBatch / addBatch / walCommit / commitOffsets ms, and each state
@@ -48,6 +50,11 @@ import graft.plans.CheckpointBlocks
   */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
+    val (confs, names) =
+      args.partition(a => a.contains("=") && !a.startsWith("SET:"))
+    val (flags, qNames) = names.partition(_ == "explain")
+    SparkEntry.requireKnown("profile",
+      qNames.filterNot(n => n == "GC" || n.startsWith("SET:")).toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.local("graft-profile", Session.cpus(default = 32))
     @volatile var tracing = false
@@ -61,7 +68,7 @@ object ProfileQuery {
           .flatMap(p => Option(p.getProperty("spark.job.description")))
           .orElse(j.stageInfos.headOption.map(_.name.take(60)))
           .getOrElse("?")
-        val perStage = j.stageInfos.map(_.numTasks).mkString("+")
+        val perStage = j.stageInfos.sortBy(_.stageId).map(_.numTasks).mkString("+")
         starts.put(j.jobId, (System.nanoTime(), j.time, s"tasks=$perStage  $desc"))
       }
       override def onJobEnd(j: SparkListenerJobEnd): Unit =
@@ -93,28 +100,13 @@ object ProfileQuery {
       override def onQueryTerminated(
           e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     })
-    val (confs, names) =
-      args.partition(a => a.contains("=") && !a.startsWith("SET:"))
     confs.foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
       spark.conf.set(k, v)
       println(s"[profile] conf $k = $v")
     }
-    val (flags, qNames) = names.partition(_ == "explain")
-    def jobMs(): Double = {
-      val k = 9
-      val ts = Array.tabulate(k) { _ =>
-        val t0 = System.nanoTime()
-        spark.range(0L, 1L, 1L, 1)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e6
-      }
-      java.util.Arrays.sort(ts); ts(k / 2)
-    }
-    jobMs() // codegen warm-up
-    qNames.filter(n =>
-        n == "GC" || n.startsWith("SET:") || SparkEntry.queries.contains(n))
-      .foreach { n =>
+    Bench.jobLatencyMs(spark) // codegen warm-up
+    qNames.foreach { n =>
       if (n == "GC") {
         System.gc(); Thread.sleep(500); System.gc()
         println("[profile] forced full GC")
@@ -133,22 +125,18 @@ object ProfileQuery {
           .queryExecution.explainString(FormattedMode))
         CheckpointBlocks.releaseAll(spark)
       } else {
-        println(f"[profile] $n%-28s jobs_ms ${jobMs()}%6.1f")
+        println(f"[profile] $n%-28s jobs_ms ${Bench.jobLatencyMs(spark)}%6.1f")
         (1 to 3).foreach { i =>
           Seq(jobs, stages, tasks).foreach(_.set(0))
           spans.clear()
           tracing = true
           val w0 = System.currentTimeMillis()
-          val t0 = System.nanoTime()
-          SparkEntry.queries(n)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-          val dt = (System.nanoTime() - t0) / 1e9
-          val w1 = System.currentTimeMillis()
+          val dt = Bench.timedNoop(spark)(SparkEntry.queries(n)(spark, sfDir))
+          val w1 = w0 + (dt * 1e3).toLong
           Thread.sleep(150) // let the listener bus drain
           tracing = false
           val driverMs = (w1 - w0) - covered(spans.asScala.toSeq, w0, w1)
           println(f"[profile] $n%-28s run$i $dt%8.3f s  jobs=${jobs.get}%-4d stages=${stages.get}%-4d tasks=${tasks.get}%-6d driver_ms=$driverMs")
-          CheckpointBlocks.releaseAll(spark)
         }
       }
     }

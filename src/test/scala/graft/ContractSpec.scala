@@ -192,30 +192,44 @@ class ContractSpec extends SparkSpec {
     val present = Bench.Headline.intersect(SparkEntry.queries.keySet)
     val missing = Bench.Headline -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"headline names not in queries: $missing")
-    val entries = present.toSeq.sorted.map(k => s""""$k":999.99""")
-    val line = s"""{"metric":"total","value":99999.99,""" +
-      s""""value_norm":99999.99,"unit":"sec",""" +
-      s""""sentinel_pre":999.99,"sentinel_post":999.99,""" +
-      s""""sentinel_jobs_ms":[99999.9,99999.9],""" +
-      s""""n_remeasured":99,""" +
-      // worst case: the 60-char length-capped name list Bench emits,
-      // filled with the longest current query name (same algorithm)
-      s""""remeasured":[${{
-        var budget = 60
-        val longest = SparkEntry.queries.keys.maxBy(_.length)
-        Iterator.continually(longest).takeWhile { n =>
-          val c = n.length + 3; val ok = budget >= c
-          if (ok) budget -= c; ok
-        }.map("\"" + _ + "\"").mkString(",")
-      }}],""" +
-      s""""queries":{${entries.mkString(",")}},"n_failed":0,""" +
-      s""""failed":[],"full":"BENCH_FULL.json",""" +
-      s""""sf":"/root/testdata/sf0.1"}"""
+    val line = Bench.line(present.toSeq.sorted.map(_ -> Right(999.99)),
+      (999.99, 999.99), (99999.9, 99999.9), "/root/testdata/sf0.1",
+      full = false)
+    // the rendered worst case must keep every headline name and the width
+    assert(line.contains(""""sentinel_jobs_ms":[99999.9,99999.9]""") &&
+      present.forall(k => line.contains(s""""$k":999.99""")))
     info(s"worst-case headline line: ${line.length} chars (${present.size} queries)")
     assert(line.length <= 1900,
       s"headline line ${line.length} chars risks the 2000-char tail " +
         "window (sbt's success line needs ~80) — drop a member before " +
         "adding one")
+  }
+
+  test("bench line renders '.' decimals and the kept fields under any locale") {
+    import scala.jdk.CollectionConverters._
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    try {
+      val line = Bench.line(Seq("x_kcore" -> Right(1.5),
+          "x_auc" -> Left("IllegalStateException")), (0.25, 0.125),
+        (17.25, 18.5), "/root/testdata/sf0.01", full = false)
+      val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+      assert(json.fieldNames.asScala.toSet == Set("metric", "value", "unit",
+        "sentinel_pre", "sentinel_post", "sentinel_jobs_ms", "queries",
+        "n_failed", "failed", "full", "sf"))
+      assert(line.contains(""""value":1.50,""") &&
+        line.contains(""""sentinel_pre":0.25,"sentinel_post":0.13,""") &&
+        line.contains(""""sentinel_jobs_ms":[17.3,18.5]""") &&
+        line.contains(""""queries":{"x_kcore":1.50}"""), line)
+      assert(json.get("n_failed").asInt == 1 &&
+        json.get("failed").get(0).asText == "x_auc: IllegalStateException")
+    } finally java.util.Locale.setDefault(saved)
+  }
+
+  test("unknown query names are caught, in order") {
+    assert(SparkEntry.unknown(Seq("x_kcore", "x_kcroe", "q_fact_summary",
+      "nope")) == Seq("x_kcroe", "nope"))
+    assert(SparkEntry.unknown(SparkEntry.queries.keys.toSeq).isEmpty)
   }
 
   /** Round-7 driver postmortem (VERDICT.md): every query whose FINAL
