@@ -12,13 +12,30 @@ import org.apache.spark.sql.functions._
   * `decimal(18,2)` (associative, order-independent) and cast the final
   * result back to double (correctly rounded, hence bit-identical across
   * engines). Derived ratios divide those identical doubles, and IEEE
-  * division of identical inputs is deterministic everywhere.
+  * division of identical inputs is deterministic everywhere. Totals of
+  * computed doubles fold in a fixed key order instead (`orderedSum`).
   */
 object Exact {
 
   /** Order-independent money sum: exact decimal accumulate, double out. */
   def moneySum(c: Column): Column =
     sum(c.cast("decimal(18,2)")).cast("double")
+
+  /** Order-fixed double sum: `term` folded left to right from a 0.0
+    * seed in ascending `orderBy` order (the term itself breaks ties),
+    * whatever the partitioning. The oracle's
+    * `list_reduce([0.0] || list(term ORDER BY ...), (a, v) -> a + v)`
+    * folds in the same order, so the double is bit-identical in both
+    * engines. A NULL term makes the sum NULL. The fold collects the
+    * group's terms into one sorted array, so use it on groups of
+    * bounded size. */
+  def orderedSum(term: Column, orderBy: Column*): Column = {
+    val keys = orderBy.zipWithIndex.map { case (c, i) => c.as(s"k$i") }
+    aggregate(
+      transform(sort_array(collect_list(struct(keys :+ term.as("term"): _*))),
+        _.getField("term")),
+      lit(0.0), _ + _)
+  }
 
   /** Conditional count (reference's only custom aggregate — the pandas
     * lambda at /root/reference/scripts/gold/load_gold.py:108). count()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact
 import graft.plans.CheckpointBlocks
 
 /** Graph operators for the dedup pipeline (SURVEY.md §2.10): near-dup
@@ -941,11 +942,8 @@ object Graphs {
       sum(col("cnt")).as("n_reached"),
       sum(col("dist").cast("long") * col("cnt")).as("sum_dist"),
       // ≤ maxHops pairs per landmark: parameter-bounded ordered fold
-      aggregate(
-        sort_array(collect_list(struct(col("dist"), col("cnt")))),
-        lit(0.0),
-        (acc, s) => acc + s.getField("cnt").cast("double") /
-          s.getField("dist").cast("double")).as("harmonic"))
+      Exact.orderedSum(col("cnt").cast("double") / col("dist").cast("double"),
+        col("dist"), col("cnt")).as("harmonic"))
       .select(col("lm").as("landmark"), col("n_reached"), col("sum_dist"),
         (col("n_reached").cast("double") / col("sum_dist").cast("double"))
           .as("closeness"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.Text
+import graft.functions.{Exact, Text}
 
 /** RAKE keyword extraction (Rose et al. 2010, "Automatic Keyword
   * Extraction from Individual Documents"): candidate phrases are the
@@ -51,12 +51,9 @@ object Keywords {
       .agg(count(lit(1)).as("freq"), sum(col("len")).as("deg"))
     val scored = occ.join(wstats, Seq("w"))
       .groupBy("doc", "grp")
-      .agg(sort_array(collect_list(struct(col("wi"),
-          (col("deg").cast("double") / col("freq").cast("double"))
-            .as("s")))).as("sc"))
-      .select(col("doc"), col("grp"),
-        aggregate(transform(col("sc"), x => x.getField("s")),
-          lit(0.0), (a, x) => a + x).as("score"))
+      .agg(Exact.orderedSum(
+        col("deg").cast("double") / col("freq").cast("double"), col("wi"))
+        .as("score"))
     phrases.select(col("doc"), col("grp"),
         concat_ws(" ", col("ws")).as("phrase"))
       .join(scored, Seq("doc", "grp"))

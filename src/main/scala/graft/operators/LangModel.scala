@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Pmath, Text}
+import graft.functions.{Exact, Pmath, Text}
 
 /** Statistical language-model scoring (SURVEY.md §2.10 extension
   * surface): the CCNet-style quality filter — score each document by the
@@ -44,11 +44,9 @@ object LangModel {
       .withColumn("lnp", -Pmath.lnColumn(
         (col("ctx") + col("vsz")).cast("double") / (col("cbg") + lit(1))))
     scored.groupBy("doc")
-      .agg(sort_array(collect_list(struct(col("pos"), col("lnp")))).as("ps"))
-      .select(col("doc").as("doc_id"),
-        size(col("ps")).cast("long").as("n_bigrams"),
-        (aggregate(transform(col("ps"), p => p.getField("lnp")),
-          lit(0.0), (a, x) => a + x) / size(col("ps"))).as("avg_lnp"))
+      .agg(count(lit(1)).as("n"), Exact.orderedSum(col("lnp"), col("pos")).as("s"))
+      .select(col("doc").as("doc_id"), col("n").as("n_bigrams"),
+        (col("s") / col("n")).as("avg_lnp"))
   }
 
   /** BPE merge training (Sennrich et al. 2016) — tokenizer vocabulary
@@ -283,11 +281,9 @@ object LangModel {
         Pmath.lnColumn(col("n").cast("double") / col("c").cast("double")))
       .groupBy("doc")
       .agg(max(col("n")).as("n"), count(lit(1)).as("vocab"),
-        sort_array(collect_list(struct(col("t"), col("h")))).as("hs"))
+        Exact.orderedSum(col("h"), col("t")).as("entropy"))
       .select(col("doc").as("doc_id"), col("n").as("n_tokens"),
-        col("vocab").as("vocab_size"),
-        aggregate(transform(col("hs"), p => p.getField("h")),
-          lit(0.0), (a, x) => a + x).as("entropy"))
+        col("vocab").as("vocab_size"), col("entropy"))
   }
 
   /** PMI collocation extraction (Church & Hanks 1990) — the classic
@@ -455,14 +451,11 @@ object LangModel {
       .withColumn("lnx",
         Pmath.lnColumn(col("cp") + 1) - Pmath.lnColumn(col("cn") + 1))
       .groupBy("doc", "y")
-      .agg(sort_array(collect_list(struct(col("pos"), col("lnx")))).as("ps"))
+      .agg(count(lit(1)).as("n"), Exact.orderedSum(col("lnx"), col("pos")).as("s"))
       .crossJoin(broadcast(consts))
-      .select(col("doc").as("doc_id"),
-        size(col("ps")).cast("long").as("n_tokens"),
-        (col("ln_prior") +
-          aggregate(transform(col("ps"), p => p.getField("lnx")),
-            lit(0.0), (a, x) => a + x) +
-          size(col("ps")).cast("double") * col("ln_den")).as("margin"),
+      .select(col("doc").as("doc_id"), col("n").as("n_tokens"),
+        (col("ln_prior") + col("s") +
+          col("n").cast("double") * col("ln_den")).as("margin"),
         col("y").as("actual"))
       .withColumn("pred", col("margin") > 0)
       .withColumn("correct", col("pred") === col("actual"))
@@ -554,11 +547,9 @@ object LangModel {
       .crossJoin(broadcast(bt))
       .withColumn("lnp", -Pmath.lnColumn(lit(1.0) / p))
       .groupBy("doc")
-      .agg(sort_array(collect_list(struct(col("pos"), col("lnp")))).as("ps"))
-      .select(col("doc").as("doc_id"),
-        size(col("ps")).cast("long").as("n_bigrams"),
-        (aggregate(transform(col("ps"), x => x.getField("lnp")),
-          lit(0.0), (a, x) => a + x) / size(col("ps"))).as("avg_lnp"))
+      .agg(count(lit(1)).as("n"), Exact.orderedSum(col("lnp"), col("pos")).as("s"))
+      .select(col("doc").as("doc_id"), col("n").as("n_bigrams"),
+        (col("s") / col("n")).as("avg_lnp"))
   }
 
   /** Statistical text-watermark detector (the Kirchenbauer et al. 2023

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact
+
 /** Entity resolution (MDM / record linkage) — the insurance-CRM job the
   * reference's silver layer feeds (dirty customer rows:
   * /root/reference/scripts/silver/load_silver.py:40-78): find the
@@ -141,11 +143,6 @@ object Resolve {
       .agg(count(lit(1)).as("n"))
       .withColumn("pid",
         col("d1") * lit(4L) + col("d2") * lit(2L) + col("d3"))
-    // ordered cross-pattern fold (≤ 8 rows): sum in pid order
-    def osum(x: Column): Column = aggregate(
-      transform(sort_array(collect_list(struct(col("pid"), x.as("x")))),
-        t => t.getField("x")),
-      lit(0.0), (a, v) => a + v)
     def bern(d: String, p: Column): Column =
       when(col(d) === 1, p).otherwise(lit(1.0) - p)
     val par0 = Seq(("pi", pi0), ("m1", m0), ("m2", m0), ("m3", m0),
@@ -163,20 +160,17 @@ object Resolve {
         (wm / (wm + wu)).as("gam"))
       val ng = col("n").cast("double") * col("gam")
       val nu = col("n").cast("double") * (lit(1.0) - col("gam"))
+      // ordered cross-pattern folds (≤ 8 rows): sums in pid order
+      val pid = col("pid")
+      def share(d: String, w: Column): Column =
+        Exact.orderedSum(when(col(d) === 1, w).otherwise(lit(0.0)), pid) /
+          Exact.orderedSum(w, pid)
       par = g.groupBy().agg(
-        (osum(ng) / osum(col("n").cast("double"))).as("pi"),
-        (osum(when(col("d1") === 1, ng).otherwise(lit(0.0))) / osum(ng))
-          .as("m1"),
-        (osum(when(col("d2") === 1, ng).otherwise(lit(0.0))) / osum(ng))
-          .as("m2"),
-        (osum(when(col("d3") === 1, ng).otherwise(lit(0.0))) / osum(ng))
-          .as("m3"),
-        (osum(when(col("d1") === 1, nu).otherwise(lit(0.0))) / osum(nu))
-          .as("u1"),
-        (osum(when(col("d2") === 1, nu).otherwise(lit(0.0))) / osum(nu))
-          .as("u2"),
-        (osum(when(col("d3") === 1, nu).otherwise(lit(0.0))) / osum(nu))
-          .as("u3"))
+        (Exact.orderedSum(ng, pid) /
+          Exact.orderedSum(col("n").cast("double"), pid)).as("pi"),
+        share("d1", ng).as("m1"), share("d2", ng).as("m2"),
+        share("d3", ng).as("m3"), share("d1", nu).as("u1"),
+        share("d2", nu).as("u2"), share("d3", nu).as("u3"))
     }
     g.select("d1", "d2", "d3", "n", "gam")
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Pmath, Text}
+import graft.functions.{Exact, Pmath, Text}
 
 /** Text retrieval / ranking primitives (SURVEY.md §2.10 extension
   * surface): BM25 query ranking, TF-IDF term weighting, and the inverted
@@ -198,20 +198,14 @@ object Retrieval {
       .withColumn("w", col("tf") * Pmath.lnColumn(col("n_docs") / col("df")))
       .select("doc", "term", "w")
     val norms = w.groupBy("doc")
-      .agg(sort_array(collect_list(struct(col("term"),
-        (col("w") * col("w")).as("w2")))).as("ws"))
-      .select(col("doc"), sqrt(aggregate(transform(col("ws"),
-        p => p.getField("w2")), lit(0.0), (a, x) => a + x)).as("nrm"))
+      .agg(sqrt(Exact.orderedSum(col("w") * col("w"), col("term"))).as("nrm"))
     val pairs = w.select(col("term"), col("doc").as("doc_a"), col("w").as("wa"))
       .join(w.select(col("term"), col("doc").as("doc_b"), col("w").as("wb")),
         Seq("term"))
       .filter(col("doc_a") < col("doc_b"))
       .groupBy("doc_a", "doc_b")
       .agg(count(lit(1)).as("n_shared"),
-        sort_array(collect_list(struct(col("term"),
-          (col("wa") * col("wb")).as("p")))).as("ps"))
-      .withColumn("dot", aggregate(transform(col("ps"),
-        p => p.getField("p")), lit(0.0), (a, x) => a + x))
+        Exact.orderedSum(col("wa") * col("wb"), col("term")).as("dot"))
     pairs
       .join(norms.select(col("doc").as("doc_a"), col("nrm").as("na")), Seq("doc_a"))
       .join(norms.select(col("doc").as("doc_b"), col("nrm").as("nb")), Seq("doc_b"))

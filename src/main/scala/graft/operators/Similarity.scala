@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Vectors
+import graft.plans.CheckpointBlocks
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (SURVEY.md §2.10).
@@ -709,7 +710,8 @@ object Similarity {
     * Scale shape: the expensive stage is the shortlist itself (the
     * audited top-k); everything after runs on parameter-bounded frames
     * — shortlist² pair sims per query, then k bounded rounds of
-    * key-partitioned joins and rank-1 windows. No driver action. */
+    * key-partitioned joins and rank-1 windows, each round one
+    * checkpoint job in [[CheckpointBlocks.iterate]]. */
   def mmrDiversify(queries: DataFrame, corpus: DataFrame, qId: String,
                    qVec: String, cId: String, cVec: String,
                    shortlist: Int, k: Int, lambda: Double): DataFrame = {
@@ -738,13 +740,16 @@ object Similarity {
     // shortlist plan re-executes exponentially in k
     val candsCk = cands.localCheckpoint(true)
     val pairsCk = pairs.localCheckpoint(true)
-    var selected = candsCk
+    val first = candsCk
       .withColumn("score", mmr(col("rel"), lit(0.0)))
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("query_id"), col("neighbor_id"), col("rel"),
         col("score"), lit(1).as("round"))
-      .localCheckpoint(true)
-    (2 to k).foreach { r =>
+    var r = 1
+    val (kept, _) = CheckpointBlocks.iterate("mmrDiversify", first, k - 1,
+        CheckpointBlocks.Retain.Last) { live =>
+      r += 1
+      val selected = live.head
       val notSel = candsCk.join(
         selected.select("query_id", "neighbor_id"),
         Seq("query_id", "neighbor_id"), "left_anti")
@@ -759,8 +764,8 @@ object Similarity {
         .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
         .select(col("query_id"), col("neighbor_id"), col("rel"),
           col("score"), lit(r).as("round"))
-      selected = selected.unionByName(pick).localCheckpoint(true)
+      selected.unionByName(pick)
     }
-    selected
+    kept.head
   }
 }

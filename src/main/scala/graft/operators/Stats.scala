@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Pmath, Text}
+import graft.functions.{Exact, Pmath, Text}
 
 /** Distribution-drift and association statistics — the monitoring side
   * of a data pipeline: did this batch's value distribution move against
@@ -104,11 +104,7 @@ object Stats {
         .otherwise((col("q") - col("p")) * lnx))
       .select("bin", "c_ref", "c_cur", "psi_contrib")
     val total = bins
-      .agg(aggregate(
-        transform(
-          sort_array(collect_list(struct(col("bin"), col("psi_contrib")))),
-          x => x.getField("psi_contrib")),
-        lit(0.0), (a, x) => a + x).as("psi_total"))
+      .agg(Exact.orderedSum(col("psi_contrib"), col("bin")).as("psi_total"))
     bins.crossJoin(broadcast(total))
   }
 
@@ -226,12 +222,8 @@ object Stats {
     val nr = col("n_reps").cast("double")
     val folded = perRep.groupBy("g").agg(
         count(lit(1)).as("n_reps"),
-        sort_array(collect_list(struct(col("b"), col("mb")))).as("ms"))
-      .select(col("g"), col("n_reps"),
-        aggregate(transform(col("ms"), p => p.getField("mb")),
-          lit(0.0), (a, x) => a + x).as("s1"),
-        aggregate(transform(col("ms"), p => p.getField("mb")),
-          lit(0.0), (a, x) => a + x * x).as("s2"))
+        Exact.orderedSum(col("mb"), col("b")).as("s1"),
+        Exact.orderedSum(col("mb") * col("mb"), col("b"), col("mb")).as("s2"))
       .select(col("g"), col("n_reps"),
         (col("s1") / nr).as("boot_mean"),
         sqrt((col("s2") - col("s1") * col("s1") / nr) / (nr - lit(1.0)))
@@ -818,11 +810,8 @@ object Stats {
     // discipline holds regardless
     val folded = per.agg(count(lit(1)).as("k"), sum("ng").as("n"),
         sum("sg").as("s_all"), sum("qg").as("q_all"),
-        aggregate(
-          transform(sort_array(collect_list(struct(col("g"),
-            ((dbl(col("sg")) * dbl(col("sg"))) / dbl(col("ng"))).as("t")))),
-            x => x.getField("t")),
-          lit(0.0), (a, x) => a + x).as("t_sum"))
+        Exact.orderedSum((dbl(col("sg")) * dbl(col("sg"))) / dbl(col("ng")),
+          col("g")).as("t_sum"))
     folded.select(col("k"), col("n"),
         (col("t_sum") - (dbl(col("s_all")) * dbl(col("s_all"))) /
           dbl(col("n"))).as("ssb"),
@@ -908,10 +897,7 @@ object Stats {
           .as("term"))
     term.agg(max("n").as("n"),
         countDistinct("r").as("rk"), countDistinct("c").as("ck"),
-        aggregate(
-          transform(sort_array(collect_list(struct(col("r"), col("c"),
-            col("term").as("t")))), x => x.getField("t")),
-          lit(0.0), (a, x) => a + x).as("chi2"))
+        Exact.orderedSum(col("term"), col("r"), col("c")).as("chi2"))
       .select(col("n"), col("rk"), col("ck"), col("chi2"),
         sqrt(col("chi2") / (dbl(col("n")) *
           dbl(least(col("rk"), col("ck")) - lit(1L)))).as("cramers_v"))
@@ -1138,9 +1124,7 @@ object Stats {
         ddec(col("s_g")) * ddec(col("s_g")) / dbl(col("n_g"))).as("ssw_g"),
       (ddec(col("s_g")) / dbl(col("n_g"))).as("mean_g"))
     val msw = terms.agg(sum("n_g").as("n_tot"), count(lit(1)).as("k_grp"),
-        aggregate(transform(sort_array(collect_list(
-          struct(col("g"), col("ssw_g").as("t")))), x => x.getField("t")),
-          lit(0.0), (a, x) => a + x).as("ssw"))
+        Exact.orderedSum(col("ssw_g"), col("g")).as("ssw"))
       .select(col("n_tot"), col("k_grp"),
         (col("ssw") / dbl(col("n_tot") - col("k_grp"))).as("msw"))
     val t1 = terms.select(col("g").as("g1"), col("n_g").as("n1"),
@@ -1356,12 +1340,9 @@ object Stats {
           dbl(col("d")) * col("rat"))
         .withColumn("ti", dbl(col("d")) *
           (col("s2") / col("s0") - col("rat") * col("rat")))
-      def fold(term: Column, out: String) =
-        aggregate(transform(sort_array(collect_list(
-          struct(col("dur"), term.as("t")))), x => x.getField("t")),
-          lit(0.0), (a, x) => a + x).as(out)
       fit = spine.agg(max("n").as("n"), max("pbeta").as("pbeta"),
-          fold(col("tu"), "usum"), fold(col("ti"), "isum"))
+          Exact.orderedSum(col("tu"), col("dur")).as("usum"),
+          Exact.orderedSum(col("ti"), col("dur")).as("isum"))
         .select(col("n"), col("usum"), col("isum"),
           (col("pbeta") + col("usum") / col("isum")).as("beta"))
     }
@@ -1886,13 +1867,10 @@ object Stats {
       .groupBy("g").agg(sum(col("cgv") * col("m2")).as("r2g"),
         sum("cgv").as("ng"))
     val folded = perG.agg(count(lit(1)).as("k"), sum("ng").as("n"),
-      aggregate(
-        transform(sort_array(collect_list(struct(col("g"),
-          (((col("r2g").cast("double") / lit(2.0)) *
-            (col("r2g").cast("double") / lit(2.0))) /
-            col("ng").cast("double")).as("t")))),
-          x => x.getField("t")),
-        lit(0.0), (a, x) => a + x).as("t_sum"))
+      Exact.orderedSum(
+        ((col("r2g").cast("double") / lit(2.0)) *
+          (col("r2g").cast("double") / lit(2.0))) /
+          col("ng").cast("double"), col("g")).as("t_sum"))
     folded.crossJoin(broadcast(ties))
       .select(col("k"), col("n"),
         ((lit(12.0) / (dbl(col("n")) * (dbl(col("n")) + lit(1.0))) *
@@ -1977,10 +1955,7 @@ object Stats {
           signedLnRatio(col("c") * col("n"), col("cx") * col("cy")))
           .as("mi_contrib"))
     val total = contrib.agg(
-      aggregate(
-        transform(sort_array(collect_list(struct(col("x"), col("y"),
-          col("mi_contrib").as("t")))), x => x.getField("t")),
-        lit(0.0), (a, x) => a + x).as("mi_total"))
+      Exact.orderedSum(col("mi_contrib"), col("x"), col("y")).as("mi_total"))
     contrib.crossJoin(broadcast(total))
   }
 
@@ -2015,10 +1990,7 @@ object Stats {
           signedLnRatio(lit(2L) * col("cb") * col("na"), den)).as("term"))
     val folded = pSide.union(qSide).agg(
       count(lit(1)).as("legs"),
-      aggregate(
-        transform(sort_array(collect_list(struct(col("s"), col("k"),
-          col("term").as("t")))), x => x.getField("t")),
-        lit(0.0), (a, x) => a + x).as("t_sum"))
+      Exact.orderedSum(col("term"), col("s"), col("k")).as("t_sum"))
     folded.crossJoin(broadcast(tot))
       .select(col("na"), col("nb"), col("legs"),
         (lit(0.5) * col("t_sum")).as("js_nats"))
@@ -2313,10 +2285,7 @@ object Stats {
       .withColumn("term",
         Pmath.lnColumn(col("c")) - Pmath.lnColumn(col("xk1")))
       .agg(count(lit(1)).as("n_top"), max(col("xk1")).as("xk1_cents"),
-        aggregate(
-          transform(sort_array(collect_list(struct(col("c"), col("term")))),
-            x => x.getField("term")),
-          lit(0.0), (a, x) => a + x).as("s"))
+        Exact.orderedSum(col("term"), col("c")).as("s"))
       // divide by the ACTUAL top count minus the x_(k+1) row, not the
       // requested k — an input with fewer than k+1 positive values
       // would otherwise silently deflate hill_mean; n_top == 1 (a
@@ -2403,10 +2372,7 @@ object Stats {
         col("ni").cast("double") * Pmath.lnColumn(col("ni")))
       .groupBy("g")
       .agg(count(lit(1)).as("n_cats"), sum(col("ni")).as("n"),
-        aggregate(
-          transform(sort_array(collect_list(struct(col("c"), col("term")))),
-            x => x.getField("term")),
-          lit(0.0), (a, x) => a + x).as("s"))
+        Exact.orderedSum(col("term"), col("c")).as("s"))
       .select(col("g").as(groupCol), col("n_cats"), col("n"),
         (Pmath.lnColumn(col("n")) - col("s") / col("n").cast("double"))
           .as("entropy"))
@@ -2430,10 +2396,6 @@ object Stats {
     * @return (i, theta, p) — round-`iters` strength and its
     *         normalized share */
   def bradleyTerry(wins: DataFrame, iters: Int = 3): DataFrame = {
-    def ofold(key: Column, x: Column): Column = aggregate(
-      transform(sort_array(collect_list(struct(key.as("k"), x.as("x")))),
-        t => t.getField("x")),
-      lit(0.0), (a, v) => a + v)
     // each MM round references θ twice (θ_i, θ_j) and nij once; without
     // lineage truncation the upstream win-count plan re-executes
     // O(2^iters) times — checkpoint the ITEM-pair-bounded frames once
@@ -2455,12 +2417,12 @@ object Stats {
           (col("n").cast("double") / (col("thi") + col("thj")))
             .as("term"))
       val den = terms.groupBy("i")
-        .agg(ofold(col("j"), col("term")).as("den"))
+        .agg(Exact.orderedSum(col("term"), col("j")).as("den"))
       th = wi.join(den, Seq("i"))
         .select(col("i"), (col("wi").cast("double") / col("den")).as("th"))
         .localCheckpoint(true)
     }
-    val z = th.groupBy().agg(ofold(col("i"), col("th")).as("z"))
+    val z = th.groupBy().agg(Exact.orderedSum(col("th"), col("i")).as("z"))
     th.crossJoin(broadcast(z))
       .select(col("i"), col("th").as("theta"),
         (col("th") / col("z")).as("p"))
@@ -2920,9 +2882,6 @@ object Stats {
       dbl(col("st")).as("st_d"), dbl(col("sv")).as("sv_d"))
       .withColumn("a", (col("sv_d") - col("b") * col("st_d")) /
         col("n").cast("double"))
-    def ofold(x: Column): Column = aggregate(
-      transform(sort_array(collect_list(struct(col("t"), x.as("x")))),
-        s => s.getField("x")), lit(0.0), (acc, v) => acc + v)
     daily.join(fit, Seq("k"))
       .withColumn("e", col("v").cast("double") - col("a") -
         col("b") * col("t").cast("double"))
@@ -2930,9 +2889,9 @@ object Stats {
         col("e") - lag(col("e"), 1).over(
           Window.partitionBy("k").orderBy("t")))
       .groupBy(col("k").as(keyCol))
-      .agg(max("n").as("n"), ofold(col("e") * col("e")).as("sse"),
-        ofold(when(col("de").isNotNull, col("de") * col("de"))
-          .otherwise(lit(0.0))).as("ssd"))
+      .agg(max("n").as("n"), Exact.orderedSum(col("e") * col("e"), col("t")).as("sse"),
+        Exact.orderedSum(when(col("de").isNotNull, col("de") * col("de"))
+          .otherwise(lit(0.0)), col("t")).as("ssd"))
       .select(col(keyCol), col("n"), (col("ssd") / col("sse")).as("dw"))
   }
 

@@ -2,7 +2,7 @@ package graft.pipelines
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.Text
+import graft.functions.{Exact, Text}
 import graft.operators.{Dedup, Graphs}
 
 /** The LLM-corpus cleaning pipeline (SURVEY.md §2.10) — the composition
@@ -114,11 +114,8 @@ object Corpus {
                          textCol: String, budgetTokens: Long): DataFrame = {
     val tok = docs.groupBy(col(shardCol).as("source"))
       .agg(sum(Text.tokenCountWs(col(textCol)).cast("long")).as("n_tokens"))
-    val z = tok
-      .agg(sort_array(collect_list(struct(col("source"),
-        sqrt(col("n_tokens").cast("double")).as("w")))).as("ws"))
-      .select(aggregate(transform(col("ws"), p => p.getField("w")),
-        lit(0.0), (a, x) => a + x).as("z"))
+    val z = tok.agg(Exact.orderedSum(sqrt(col("n_tokens").cast("double")),
+      col("source")).as("z"))
     tok.crossJoin(broadcast(z))
       .select(col("source"), col("n_tokens"),
         (sqrt(col("n_tokens").cast("double")) / col("z")).as("weight"),

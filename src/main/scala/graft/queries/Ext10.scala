@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.Pmath
+import graft.functions.{Exact, Pmath}
 import graft.operators.{Graphs, Rank, Stats, Temporal}
 
 /** Round-8 third wave — nonparametric / categorical-association
@@ -14,7 +14,7 @@ import graft.operators.{Graphs, Rank, Stats, Temporal}
   *  - the distinct-value spine with [[Rank.withCumSums]] (integer
   *    2·midrank) for Brunner–Munzel placements and the Mood median
   *    test's exact lower median;
-  *  - bounded-categorical folds (sorted `collect_list` + `aggregate`)
+  *  - bounded-categorical folds ([[Exact.orderedSum]])
   *    for the ≤ k·m-term double sums — fixed op order on both engines;
   *  - the [[Pmath.lnColumn]] portable ln on ≥ 1 integer ratios for the
   *    Theil-U entropies;
@@ -67,9 +67,7 @@ object Ext10 extends QuerySet {
             (dbl(col("ng") - col("ag")) - col("ebd")) / col("ebd"))
       terms.agg(max("k").as("k"), max("nn").as("n"),
           max("aa").as("n_above"),
-          aggregate(transform(sort_array(collect_list(
-            struct(col("g"), col("tg")))), x => x.getField("tg")),
-            lit(0.0), (a, x) => a + x).as("chi2"))
+          Exact.orderedSum(col("tg"), col("g")).as("chi2"))
         .crossJoin(broadcast(med))
         .select(col("med"), col("n"), col("k"), col("n_above"), col("chi2"))
     }),
@@ -89,15 +87,11 @@ object Ext10 extends QuerySet {
       val hy = margY.crossJoin(broadcast(tot))
         .withColumn("tv", dbl(col("cy")) / dbl(col("n")) *
           Pmath.lnColumn(dbl(col("n")) / dbl(col("cy"))))
-        .agg(aggregate(transform(sort_array(collect_list(
-          struct(col("y"), col("tv")))), x => x.getField("tv")),
-          lit(0.0), (a, x) => a + x).as("h_y"))
+        .agg(Exact.orderedSum(col("tv"), col("y")).as("h_y"))
       val hyx = cells.join(margX, Seq("x")).crossJoin(broadcast(tot))
         .withColumn("tv", dbl(col("c")) / dbl(col("n")) *
           Pmath.lnColumn(dbl(col("cx")) / dbl(col("c"))))
-        .agg(aggregate(transform(sort_array(collect_list(
-          struct(col("x"), col("y"), col("tv")))), x => x.getField("tv")),
-          lit(0.0), (a, x) => a + x).as("h_yx"))
+        .agg(Exact.orderedSum(col("tv"), col("x"), col("y")).as("h_yx"))
       hy.crossJoin(hyx).crossJoin(broadcast(tot))
         .select(col("n"), col("h_y"), col("h_yx"),
           ((col("h_y") - col("h_yx")) / col("h_y")).as("theil_u"))
@@ -399,14 +393,11 @@ object Ext10 extends QuerySet {
         .filter(col("vj") > 0 && col("nj") > 0)
         .withColumn("lx", Pmath.lnColumn(dbl(col("nj"))))
         .withColumn("ly", Pmath.lnColumn(dbl(col("vj"))))
-      def fold(term: Column, out: String) =
-        aggregate(transform(sort_array(collect_list(
-          struct(col("j"), term.as("t")))), x => x.getField("t")),
-          lit(0.0), (a, x) => a + x).as(out)
       pts.agg(count(lit(1)).as("n_points"),
-          fold(col("lx"), "sx"), fold(col("ly"), "sy"),
-          fold(col("lx") * col("ly"), "sxy"),
-          fold(col("lx") * col("lx"), "sxx"))
+          Exact.orderedSum(col("lx"), col("j")).as("sx"),
+          Exact.orderedSum(col("ly"), col("j")).as("sy"),
+          Exact.orderedSum(col("lx") * col("ly"), col("j")).as("sxy"),
+          Exact.orderedSum(col("lx") * col("lx"), col("j")).as("sxx"))
         .withColumn("kd", dbl(col("n_points")))
         .withColumn("beta",
           (col("kd") * col("sxy") - col("sx") * col("sy")) /

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.Pmath
+import graft.functions.{Exact, Pmath}
 import graft.operators.Temporal
 
 /** Round-8 sixth wave — spectral analysis on the portable trig kernel
@@ -20,11 +20,6 @@ object Ext13 extends QuerySet {
     Tables.load(s, dir, name)
 
   private val dbl = (c: Column) => c.cast("double")
-
-  private def fold(orderCol: String, term: Column, out: String) =
-    aggregate(transform(sort_array(collect_list(
-      struct(col(orderCol), term.as("t_")))), x => x.getField("t_")),
-      lit(0.0), (a, x) => a + x).as(out)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -52,7 +47,8 @@ object Ext13 extends QuerySet {
         .withColumn("tc", dbl(col("c")) * Pmath.cosColumn(col("th")))
         .withColumn("ts", dbl(col("c")) * Pmath.sinColumn(col("th")))
       grid.groupBy("k").agg(count(lit(1)).as("n_days"),
-          fold("t", col("tc"), "sc"), fold("t", col("ts"), "ss"))
+          Exact.orderedSum(col("tc"), col("t")).as("sc"),
+          Exact.orderedSum(col("ts"), col("t")).as("ss"))
         .select(col("k"), col("n_days"), col("sc"), col("ss"),
           (col("sc") * col("sc") + col("ss") * col("ss")).as("power"))
     }),
@@ -81,10 +77,11 @@ object Ext13 extends QuerySet {
         .withColumn("tc", dbl(col("c")) * Pmath.cosColumn(col("th")))
         .withColumn("ts", dbl(col("c")) * Pmath.sinColumn(col("th")))
       val agg16 = grid.groupBy("k").agg(
-          fold("t", col("tc"), "sc"), fold("t", col("ts"), "ss"))
+          Exact.orderedSum(col("tc"), col("t")).as("sc"),
+          Exact.orderedSum(col("ts"), col("t")).as("ss"))
         .select(col("k"),
           (col("sc") * col("sc") + col("ss") * col("ss")).as("power"))
-      val tot = agg16.agg(fold("k", col("power"), "tp"),
+      val tot = agg16.agg(Exact.orderedSum(col("power"), col("k")).as("tp"),
         max("power").as("maxp"))
       val terms = agg16.crossJoin(broadcast(tot))
         .filter(col("power") > 0.0)
@@ -92,7 +89,7 @@ object Ext13 extends QuerySet {
         .withColumn("term",
           col("p") * Pmath.lnColumn(col("tp") / col("power")))
       terms.agg(count(lit(1)).as("n_harm"), max("tp").as("total_power"),
-          fold("k", col("term"), "h_spectral"),
+          Exact.orderedSum(col("term"), col("k")).as("h_spectral"),
           min(when(col("power") === col("maxp"), col("k"))).as("peak_k"))
         .select(col("n_harm"), col("total_power"), col("h_spectral"),
           (col("h_spectral") / lit(math.log(16.0))).as("h_norm"),

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.Text
+import graft.functions.{Exact, Text}
 import graft.operators.{Rank, Stats}
+import graft.plans.CheckpointBlocks
 
 /** Round-6 session-3 waves — forty-plus graded operators across six
   * families, every one with a bit-exact DuckDB oracle:
@@ -145,11 +146,7 @@ object Ext7 extends QuerySet {
           (col("w") * (coalesce(col("b.v"), lit(0.0)) -
             coalesce(col("a.v"), lit(0.0)))).as("term"))
         .groupBy("channel")
-        .agg(aggregate(
-          transform(
-            sort_array(collect_list(struct(col("s_mask"), col("term")))),
-            x => x.getField("term")),
-          lit(0.0), (acc, x) => acc + x).as("phi"))
+        .agg(Exact.orderedSum(col("term"), col("s_mask")).as("phi"))
     }),
 
     // t-closeness privacy audit (Li, Li & Venkatasubramanian 2007):
@@ -536,10 +533,8 @@ object Ext7 extends QuerySet {
             graft.functions.Pmath.lnColumn(
               col("n").cast("double") / col("c").cast("double")))
             .as("term"))
-      val h = terms.groupBy().agg(aggregate(
-        transform(sort_array(collect_list(struct(col("pattern"),
-          col("term").as("t")))), x => x.getField("t")),
-        lit(0.0), (a, x) => a + x).as("h"))
+      val h = terms.groupBy().agg(
+        Exact.orderedSum(col("term"), col("pattern")).as("h"))
       terms.crossJoin(broadcast(h))
         .select(col("pattern"), col("c"),
           (col("c").cast("double") / col("n").cast("double")).as("p"),
@@ -828,35 +823,31 @@ object Ext7 extends QuerySet {
     // sample's (lang, source) cell weights to the FULL corpus margins
     // by three unrolled row/column scaling rounds — every scale factor
     // is a single division, margin sums fold in key order, and all
-    // frames are (langs × sources)-bounded; per-round localCheckpoint
+    // frames are (langs × sources)-bounded; each round's checkpoint
     // keeps the referenced-twice lineage linear (the Bradley–Terry
     // lesson)
     "x_ipf_raking" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      def ofold(key: Column, x: Column): Column = aggregate(
-        transform(sort_array(collect_list(struct(key.as("k"), x.as("x")))),
-          t => t.getField("x")),
-        lit(0.0), (a, v) => a + v)
       val rowT = docs.groupBy("lang").agg(count(lit(1)).as("rt"))
       val colT = docs.groupBy("source").agg(count(lit(1)).as("ct"))
-      var w = docs.where(col("doc_id") % 3 === 0)
+      val seed = docs.where(col("doc_id") % 3 === 0)
         .groupBy("lang", "source").agg(count(lit(1)).as("n_sample"))
         .withColumn("w", col("n_sample").cast("double"))
-        .localCheckpoint(true)
-      for (_ <- 1 to 3) {
+      val (kept, _) = CheckpointBlocks.iterate("x_ipf_raking", seed, 3,
+          CheckpointBlocks.Retain.Last) { live =>
+        val w = live.head
         val rowS = w.groupBy("lang")
-          .agg(ofold(col("source"), col("w")).as("rs"))
-        w = w.join(rowS, Seq("lang")).join(broadcast(rowT), Seq("lang"))
+          .agg(Exact.orderedSum(col("w"), col("source")).as("rs"))
+        val wr = w.join(rowS, Seq("lang")).join(broadcast(rowT), Seq("lang"))
           .select(col("lang"), col("source"), col("n_sample"),
             (col("w") * (col("rt").cast("double") / col("rs"))).as("w"))
-        val colS = w.groupBy("source")
-          .agg(ofold(col("lang"), col("w")).as("cs"))
-        w = w.join(colS, Seq("source")).join(broadcast(colT), Seq("source"))
+        val colS = wr.groupBy("source")
+          .agg(Exact.orderedSum(col("w"), col("lang")).as("cs"))
+        wr.join(colS, Seq("source")).join(broadcast(colT), Seq("source"))
           .select(col("lang"), col("source"), col("n_sample"),
             (col("w") * (col("ct").cast("double") / col("cs"))).as("w"))
-          .localCheckpoint(true)
       }
-      w
+      kept.head
     }),
 
     // ROUGE-L F1 between sampled docs and their same-source successor:
@@ -1157,13 +1148,9 @@ object Ext7 extends QuerySet {
       val sums = r2.groupBy("tr").agg(sum("r2").as("r2j"))
       val nb = per.groupBy()
         .agg(countDistinct(col("day")).cast("double").as("nb"))
-      def ofold(x: Column): Column = aggregate(
-        transform(sort_array(collect_list(struct(col("tr"), x.as("x")))),
-          t => t.getField("x")),
-        lit(0.0), (acc, v) => acc + v)
       sums.groupBy().agg(
-          ofold((col("r2j").cast("double") / lit(2.0)) *
-            (col("r2j").cast("double") / lit(2.0))).as("s"))
+          Exact.orderedSum((col("r2j").cast("double") / lit(2.0)) *
+            (col("r2j").cast("double") / lit(2.0)), col("tr")).as("s"))
         .crossJoin(broadcast(nb))
         .select(col("nb").cast("long").as("n_blocks"), col("s"),
           (lit(12.0) * col("s") /
@@ -1190,16 +1177,11 @@ object Ext7 extends QuerySet {
           .as("dd"))
         .withColumn("n", col("a") + col("b") + col("c") + col("dd"))
         .where(col("n") > 0L)
-      def ofold(x: Column): Column = aggregate(
-        transform(
-          sort_array(collect_list(struct(col("source"), x.as("x")))),
-          t => t.getField("x")),
-        lit(0.0), (acc, v) => acc + v)
       strata.groupBy().agg(
-          ofold((col("a") * col("dd")).cast("double") /
-            col("n").cast("double")).as("num"),
-          ofold((col("b") * col("c")).cast("double") /
-            col("n").cast("double")).as("den"))
+          Exact.orderedSum((col("a") * col("dd")).cast("double") /
+            col("n").cast("double"), col("source")).as("num"),
+          Exact.orderedSum((col("b") * col("c")).cast("double") /
+            col("n").cast("double"), col("source")).as("den"))
         .select(col("num"), col("den"),
           when(col("den") > 0.0, col("num") / col("den"))
             .otherwise(lit(null).cast("double")).as("or_mh"))
@@ -1364,12 +1346,9 @@ object Ext7 extends QuerySet {
               (lit(1.0) - col("n1d") / col("nt")) *
               ((col("nt") - col("dt")) / (col("nt") - lit(1.0))))
             .otherwise(lit(0.0)).as("vt"))
-      def ofold(x: Column): Column = aggregate(
-        transform(sort_array(collect_list(struct(col("dur"), x.as("x")))),
-          t => t.getField("x")),
-        lit(0.0), (a, v) => a + v)
-      terms.groupBy().agg(ofold(col("o1t")).as("o1"),
-          ofold(col("e1t")).as("e1"), ofold(col("vt")).as("v"))
+      terms.groupBy().agg(Exact.orderedSum(col("o1t"), col("dur")).as("o1"),
+          Exact.orderedSum(col("e1t"), col("dur")).as("e1"),
+          Exact.orderedSum(col("vt"), col("dur")).as("v"))
         .select(col("o1"), col("e1"), col("v"),
           when(col("v") > 0.0,
             ((col("o1") - col("e1")) * (col("o1") - col("e1"))) /
@@ -1458,11 +1437,7 @@ object Ext7 extends QuerySet {
         .withColumn("exp_c", col("vi").cast("double") * col("prior"))
         .groupBy("item")
         .agg(sum("ci").as("clicks"),
-          aggregate(
-            transform(
-              sort_array(collect_list(struct(col("slot"), col("exp_c")))),
-              x => x.getField("exp_c")),
-            lit(0.0), (a, x) => a + x).as("expected"))
+          Exact.orderedSum(col("exp_c"), col("slot")).as("expected"))
         .select(col("item"), col("clicks"), col("expected"),
           when(col("expected") > 0.0,
             col("clicks").cast("double") / col("expected"))

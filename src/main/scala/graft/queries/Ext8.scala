@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.{Pmath, Text, Vectors}
+import graft.functions.{Exact, Pmath, Text, Vectors}
 import graft.operators.{Rank, Similarity, Stats}
 
 /** Round-7 wave — ordinal effect sizes, L-moment fingerprints, drift
@@ -105,10 +105,7 @@ object Ext8 extends QuerySet {
             (Pmath.lnColumn(col("ni")) - Pmath.lnColumn(col("nij"))))
             .as("h"))
       terms.agg(sum("nij").as("n_trans"),
-          aggregate(
-            transform(sort_array(collect_list(struct(col("from_s"),
-              col("to_s"), col("h")))), x => x.getField("h")),
-            lit(0.0), (a, x) => a + x).as("h_num"))
+          Exact.orderedSum(col("h"), col("from_s"), col("to_s")).as("h_num"))
         .select(col("n_trans"),
           (col("h_num") / col("n_trans").cast("double")).as("h_rate"))
     }),
@@ -267,9 +264,7 @@ object Ext8 extends QuerySet {
           .getField("list").as("list"))
       val sizes = assigned.groupBy("list").agg(count(lit(1)).as("n_vecs"))
         .withColumn("w", sqrt(col("n_vecs").cast("double")))
-      val tot = sizes.agg(aggregate(
-        transform(sort_array(collect_list(struct(col("list"), col("w")))),
-          x => x.getField("w")), lit(0.0), (a, x) => a + x).as("wsum"))
+      val tot = sizes.agg(Exact.orderedSum(col("w"), col("list")).as("wsum"))
       val q0 = sizes.crossJoin(broadcast(tot))
         .withColumn("base",
           floor(lit(500.0) * col("w") / col("wsum")).cast("long"))

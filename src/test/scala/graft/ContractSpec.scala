@@ -107,6 +107,26 @@ class ContractSpec extends SparkSpec {
     assert(sites.isEmpty, s"round checkpoints outside CheckpointBlocks: $sites")
   }
 
+  test("the ordered double fold lives only in Exact.orderedSum") {
+    // a double total is bit-identical to the oracle's only when both
+    // fold it left to right in one key order; a hand copy can drift from
+    // its sort keys or seed. Kept: folds over one row's array, not over a
+    // group's rows (Temporal's slice sums, Vectors.l2Sq, the clip sum of
+    // x_vector_features, x_nelson_aalen's two cumulative slices), Corpus's
+    // sum of longs, the oracle SQL builder `osum` of x_fellegi_sunter, and
+    // Ranking's fold, which drops NULL terms so its state stays k structs
+    val g = "src/main/scala/graft/"
+    val kept = Map(g + "operators/Temporal.scala" -> 1,
+      g + "functions/Vectors.scala" -> 1, g + "queries/Ext.scala" -> 1,
+      g + "queries/Ext7.scala" -> 3, g + "pipelines/Corpus.scala" -> 1,
+      g + "operators/Ranking.scala" -> 1)
+    val sites = sitesOutside(Seq(g + "functions/Exact.scala"),
+      Seq("(a, x) => a + x", "(a, v) => a + v", "(acc, v) => acc + v",
+        "(acc, x) => acc + x", "def ofold", "def osum", "def fold("))
+    val perFile = sites.groupMapReduce(s => s.take(s.lastIndexOf(':')))(_ => 1)(_ + _)
+    assert(perFile == kept, s"ordered double folds outside Exact: $sites")
+  }
+
   test("every scaladoc sits on a definition, not on another doc comment") {
     // a doc comment followed (blank lines aside) by another doc comment
     // is orphaned: scaladoc attaches only the second one, so the first

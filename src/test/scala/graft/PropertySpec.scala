@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.functions.Exact
 import graft.operators.{Dedup, Evolve, Graphs}
 import graft.sources.Warehouse
 
@@ -41,9 +42,15 @@ class PropertySpec extends SparkSpec {
         (rng.nextInt(99999) + 1) / 100.0, rng.nextInt(4) == 0)
     }
     val base = rows.toDF("id", "g", "x", "y", "flag")
+    // terms whose plain double sum depends on the order they are added
+    // in (1e16 + 1.0 rounds the 1.0 away), in shuffled row order
+    val vs = Seq(1e16, 1.0, -1e16, 1.0, 0.5, -1e16, 1e16, 3.0, 1e-3, -0.5)
+    val terms = rng.shuffle(vs.zipWithIndex.map { case (v, k) => (k.toLong, v) })
+      .toDF("k", "v")
     def results(parts: Int): Seq[Seq[org.apache.spark.sql.Row]] = {
       val df = base.repartition(parts)
       Seq(
+        terms.repartition(parts).agg(Exact.orderedSum(col("v"), col("k"))),
         Stats.ksTwoSample(df, "x", col("g") === "g0", col("g") === "g1"),
         Stats.psiDrift(df, floor(col("x") / lit(100.0)).cast("long"),
           col("g") === "g0", col("g") =!= "g0"),
@@ -68,7 +75,17 @@ class PropertySpec extends SparkSpec {
       p1.zip(pN).zipWithIndex.foreach { case ((a, b), i) =>
         assert(a == b, s"operator #$i diverged at $parts partitions")
       }
+      assert(java.lang.Double.doubleToRawLongBits(pN.head.head.getDouble(0)) ==
+        java.lang.Double.doubleToRawLongBits(p1.head.head.getDouble(0)))
     }
+    // the key-order left fold from 0.0, not any other order's sum
+    val keyOrder = vs.foldLeft(0.0)(_ + _)
+    assert(keyOrder != vs.reverse.foldLeft(0.0)(_ + _))
+    assert(java.lang.Double.doubleToRawLongBits(p1.head.head.getDouble(0)) ==
+      java.lang.Double.doubleToRawLongBits(keyOrder))
+    val withNull = Seq((0L, Some(1.0)), (1L, None), (2L, Some(2.0))).toDF("k", "v")
+      .agg(Exact.orderedSum(col("v"), col("k"))).head()
+    assert(withNull.isNullAt(0), "a NULL term must make the sum NULL")
   }
 
   test("zValue round-trips: de-interleaving recovers both coordinates") {
